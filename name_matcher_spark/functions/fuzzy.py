@@ -30,46 +30,6 @@ CASE2 = "CASE 2"
 CASE3 = "CASE 3"
 
 
-# Set True by session._register_jvm_udfs when the fused Java ladder
-# kernel (javaudf/NmsFuzzyScore.java) is registered.
-JVM_FUSED_ENABLED = False
-
-
-def _score_fused_jvm(
-    pairs: DataFrame, include_middle: bool, lp: str, rp: str
-) -> DataFrame:
-    """One fused JVM kernel call per pair (lev + jw + metaphone +
-    ladder inside NmsFuzzyScore.java); the explode(array(...)) Generate
-    node guarantees single evaluation despite the result being
-    referenced by filter and three projections."""
-    k = F.explode(
-        F.array(
-            F.call_udf(
-                "nms_fuzzy_score",
-                F.col(f"{lp}full"),
-                F.col(f"{rp}full"),
-                F.col(f"{lp}dmeta"),
-                F.col(f"{rp}dmeta"),
-                F.col(f"{lp}simple_first"),
-                F.col(f"{rp}simple_first"),
-                F.col(f"{lp}simple_middle"),
-                F.col(f"{rp}simple_middle"),
-                F.col(f"{lp}simple_last"),
-                F.col(f"{rp}simple_last"),
-                F.lit(include_middle),
-            )
-        )
-    )
-    return (
-        pairs.select("*", k.alias("_k"))
-        .filter(F.col("_k").isNotNull())
-        .withColumn("match_case", F.col("_k.label"))
-        .withColumn("score", F.col("_k.score"))
-        .withColumn("confidence", F.col("score") / 100.0)
-        .drop("_k")
-    )
-
-
 def metaphone_pct_col(code1: Column, code2: Column) -> Column:
     """100 iff primary metaphone codes are non-empty and equal (mod.rs:96-98).
 
@@ -81,16 +41,11 @@ def metaphone_pct_col(code1: Column, code2: Column) -> Column:
     return F.when((c1 != "") & (c1 == c2), F.lit(100.0)).otherwise(F.lit(0.0))
 
 
-# Scoring-input columns per side (everything the ladder reads).
-_SCORING_INPUTS = ["full", "dmeta", "simple_first", "simple_middle", "simple_last"]
-
-
 def score_candidate_pairs(
     pairs: DataFrame,
     include_middle: bool,
     left_prefix: str = "l_",
     right_prefix: str = "r_",
-    dedup_inputs: bool = False,
 ) -> DataFrame:
     """Append score/match_case/confidence to a candidate-pair DataFrame
     and drop non-matches.
@@ -100,31 +55,9 @@ def score_candidate_pairs(
       {p}full          — normalize_simple'd full name (variant-specific)
       {p}dmeta         — double-metaphone code of the full name
       {p}simple_first / {p}simple_middle / {p}simple_last
-
-    ``dedup_inputs`` (default OFF since the kernels went JVM): scoring
-    distinct input tuples and joining back was a 2-3x win when the
-    kernels crossed the Arrow channel; with the compiled Java JW +
-    codegen ladder, direct evaluation is 2.5x FASTER than the extra
-    distinct shuffle + join at bench scale (A/B, sf0.1: 0.6 s vs
-    1.4 s on 150k pairs). Identical results either way; turn it ON for
-    extremely heavy-tailed corpora where the distinct ratio (unique
-    tuples / pairs) drops well below the shuffle's break-even.
     """
     lp, rp = left_prefix, right_prefix
     full1, full2 = F.col(f"{lp}full"), F.col(f"{rp}full")
-
-    if dedup_inputs:
-        in_cols = [f"{p}{c}" for p in (lp, rp) for c in _SCORING_INPUTS]
-        uniq = pairs.select(*in_cols).distinct()
-        scored_uniq = score_candidate_pairs(
-            uniq, include_middle, lp, rp, dedup_inputs=False
-        )
-        # inner join: non-matching tuples (dropped by the ladder) drop
-        # their pairs too, exactly like direct scoring.
-        return pairs.join(scored_uniq, on=in_cols, how="inner")
-
-    if JVM_FUSED_ENABLED:
-        return _score_fused_jvm(pairs, include_middle, lp, rp)
 
     lev = lev_pct_col(full1, full2)
     jw = jw_pct_expr(full1, full2)

@@ -21,6 +21,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .cache import cache_scope, pin
 from .functions.similarity import jw_pct_expr, lev_pct_col
 from .operators.clustering import cluster_pairs
 from .operators.dedup import (
@@ -2251,13 +2252,11 @@ def txt_corpus_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     # AND the final report join; `verd` feeds the semi-join and the
     # report. Unpinned, the 3-shuffle line-dedup subtree re-ran once
     # per consumer (measured: 11.5 s full vs ~6 s of distinct work).
-    # The run_linkage staging discipline, not cross-run caching — both
-    # pins live only inside this one lazy query.
-    cleaned = line_dedup(
-        corpus, min_docs=_CORPUS_MIN_DOCS, hash_fn="md5"
-    ).persist()
+    # Both pins outlive this call: the caller's cache_scope() around
+    # the collect releases them (bench.py clears the cache instead).
+    cleaned = pin(line_dedup(corpus, min_docs=_CORPUS_MIN_DOCS, hash_fn="md5"))
     cdocs = cleaned.select("doc_id", F.col("clean_text").alias("text"))
-    verd = text_filter_pipeline(cdocs).persist()
+    verd = pin(text_filter_pipeline(cdocs))
     kept = cdocs.join(
         verd.where(F.col("keep")).select("doc_id"), "doc_id", "leftsemi"
     )
@@ -3713,42 +3712,44 @@ def wp_crawl_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         "first_name", "middle_name", "last_name", "birthdate", "hh_id",
     ).localCheckpoint(eager=False)
 
-    dedup_pins: list[DataFrame] = []
-    disp = dedup_pipeline(
-        ents.select(
-            F.col("id").alias("doc_id"), F.col("entity_text").alias("text")
-        ),
-        shingle_k=13,
-        verify_k=13,
-        verify_threshold=0.8,
-        max_doc_freq=None,
-        minhash_hash_fn="md5",
-        pins=dedup_pins,
-        # sets-mode verify: short gram arrays + millions of candidates
-        # is exactly its sweet spot (8.2x over the exploded gram join
-        # here, bit-identical output — the oracle replays the join
-        # formulation and still hash-matches).
-        verify_mode="sets",
-    ).localCheckpoint(eager=False)
+    # The dedup tier's pins are dead once the lazy disp checkpoint has
+    # materialized, which the eager pairs checkpoint below does (via
+    # the kept_ids semi join) — so one scope spans both.
+    with cache_scope():
+        disp = dedup_pipeline(
+            ents.select(
+                F.col("id").alias("doc_id"), F.col("entity_text").alias("text")
+            ),
+            shingle_k=13,
+            verify_k=13,
+            verify_threshold=0.8,
+            max_doc_freq=None,
+            minhash_hash_fn="md5",
+            # sets-mode verify: short gram arrays + millions of
+            # candidates is exactly its sweet spot (8.2x over the
+            # exploded gram join here, bit-identical output — the
+            # oracle replays the join formulation and still
+            # hash-matches).
+            verify_mode="sets",
+        ).localCheckpoint(eager=False)
 
-    kept_ids = disp.filter(F.col("status") == "kept").select(
-        F.col("doc_id").alias("id")
-    )
-    la = prepare_persons(ents.drop("entity_text").join(kept_ids, "id", "leftsemi"))
-    lb = prepare_persons(persons_b(spark, sf_dir))
-    pairs = (
-        match_algo1(la, lb)
-        .select("id_1", "id_2", "confidence")
-        # same AQE-coalesce + checkpoint-pin hazard: the clustering
-        # loop's per-round work inherits this layout. This checkpoint
-        # stays EAGER: its job is also what materializes the lazy disp
-        # checkpoint above (via the kept_ids semi join), so the dedup
-        # pins may only be drained after it has run.
-        .repartition(spark.sparkContext.defaultParallelism)
-        .localCheckpoint()
-    )
-    for df in dedup_pins:  # disp checkpoint materialized -> caches are dead
-        df.unpersist()
+        kept_ids = disp.filter(F.col("status") == "kept").select(
+            F.col("doc_id").alias("id")
+        )
+        la = prepare_persons(
+            ents.drop("entity_text").join(kept_ids, "id", "leftsemi")
+        )
+        lb = prepare_persons(persons_b(spark, sf_dir))
+        pairs = (
+            match_algo1(la, lb)
+            .select("id_1", "id_2", "confidence")
+            # same AQE-coalesce + checkpoint-pin hazard: the clustering
+            # loop's per-round work inherits this layout. This
+            # checkpoint stays EAGER: its job is also what materializes
+            # the lazy disp checkpoint above.
+            .repartition(spark.sparkContext.defaultParallelism)
+            .localCheckpoint()
+        )
 
     counts = pairs.groupBy(F.col("id_1").alias("doc_id")).agg(
         F.count("*").alias("n_pair")

@@ -39,6 +39,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..cache import pin
+
 
 def _norm_text(col):
     """lower + collapse whitespace: canonical form for hashing."""
@@ -242,7 +244,6 @@ def ngram_jaccard_pairs(
     k: int = 3,
     threshold: float = 0.6,
     max_doc_freq: int | None = None,
-    pins: list | None = None,
     mode: str = "join",
 ) -> DataFrame:
     """Exact k-gram Jaccard over candidate pairs (or all pairs when
@@ -268,10 +269,10 @@ def ngram_jaccard_pairs(
     blowup. Jaccard is then over the filtered gram universe — a
     deterministic, documented approximation.
 
-    ``pins`` collects the gram table this call caches (it feeds both
-    the sizes aggregate and the pair join) so repeat callers can
-    unpersist once the result is materialized — the match_fuzzy /
-    run_linkage cache-hygiene contract.
+    The gram table this call reuses (it feeds both the sizes
+    aggregate and the pair join) is pinned with ``cache.pin``; a
+    caller's ``cache_scope()`` around the materializing action
+    releases it.
 
     Returns (id_a, id_b, jaccard) with jaccard >= threshold.
     intersection via gram equi-join; union = |A| + |B| - inter.
@@ -307,11 +308,9 @@ def ngram_jaccard_pairs(
         # The gram-array table feeds BOTH sides of the candidate join;
         # unpinned, the whole shingle explode + collect_list aggregate
         # runs twice (the two consumers join on different keys, so no
-        # ReusedExchange). Cache it (r06, guide §5 "reused AND
-        # recomputing is more expensive") when the caller can drain it.
-        if pins is not None:
-            sets = sets.cache()
-            pins.append(sets)
+        # ReusedExchange). Pin it (r06, guide §5 "reused AND
+        # recomputing is more expensive").
+        sets = pin(sets)
         a = sets.select(F.col(id_col).alias("id_a"), F.col("_g").alias("_ga"))
         b = sets.select(F.col(id_col).alias("id_b"), F.col("_g").alias("_gb"))
         paired = candidates.join(a, "id_a").join(b, "id_b")
@@ -343,9 +342,7 @@ def ngram_jaccard_pairs(
         if max_doc_freq is not None:
             by_gram = by_gram.filter(F.size("ds") <= max_doc_freq)
         # by_gram feeds both the per-doc sizes and the pair counts.
-        by_gram = by_gram.cache()
-        if pins is not None:
-            pins.append(by_gram)
+        by_gram = pin(by_gram)
         sizes = (
             by_gram.select(F.explode("ds").alias(id_col))
             .groupBy(id_col)
@@ -379,9 +376,7 @@ def ngram_jaccard_pairs(
             .filter(F.col("jaccard") >= threshold)
             .select("id_a", "id_b", "jaccard")
         )
-    sh = sh.cache()
-    if pins is not None:
-        pins.append(sh)
+    sh = pin(sh)
     sizes = sh.groupBy(id_col).agg(F.count("*").alias("n"))
 
     a = sh.select(F.col(id_col).alias("id_a"), "gram")
@@ -427,7 +422,6 @@ def dedup_pipeline(
     max_doc_freq: int | None = 100,
     method: str = "propagate",
     minhash_hash_fn: str = "xxhash64",
-    pins: list | None = None,
     verify_mode: str = "join",
     max_bucket_size: int | None = None,
 ) -> DataFrame:
@@ -455,11 +449,11 @@ def dedup_pipeline(
     boilerplate-collapsed signatures — before the tier-2 self-join;
     see minhash_lsh_candidates.
 
-    ``pins`` collects every DataFrame cached on the caller's behalf
-    (the exact-tier assignment, the survivor set, the LSH candidate
-    set, and the verify tier's gram-array/gram tables); drain it after
-    the result is materialized, or repeated calls in a long-lived
-    session accumulate cache entries.
+    Every DataFrame cached on the caller's behalf (the exact-tier
+    assignment, the survivor set, the LSH candidate set, and the verify
+    tier's gram-array/gram tables) is pinned with ``cache.pin``: wrap
+    the action that materializes the result in ``cache_scope()``, or
+    repeated calls in a long-lived session accumulate cache entries.
     """
     # NULL text hashes to NULL and an equi-join on a NULL key matches
     # nothing — without the sentinel, every NULL-text doc (routine in
@@ -481,17 +475,10 @@ def dedup_pipeline(
     # lengths, kept_rows). Unpinned, each consumer re-runs the md5
     # groupBy(+ the upstream corpus scan) from scratch — measured 14.1 s
     # for the crawl entity tier vs ~9 s of actual distinct work (r06,
-    # guide §5: cache what is reused and expensive). MEMORY_AND_DISK via
-    # cache-and-register so pins-draining callers release the entries.
-    def _pin(df):
-        df = df.persist()
-        if pins is not None:
-            pins.append(df)
-        return df
-
-    assigned = _pin(assigned)
+    # guide §5: cache what is reused and expensive).
+    assigned = pin(assigned)
     exact_dups = assigned.filter(F.col(id_col) != F.col("_exact_canon"))
-    surv = _pin(
+    surv = pin(
         docs.join(
             assigned.filter(F.col(id_col) == F.col("_exact_canon")).select(id_col),
             id_col,
@@ -504,7 +491,7 @@ def dedup_pipeline(
     # pair-level semi join) — and its own LSH plan (signature agg +
     # bucket self-join + distinct) is the most expensive subtree in the
     # pipeline. Pin it so verification never re-runs MinHash.
-    cands = _pin(
+    cands = pin(
         minhash_lsh_candidates(
             surv, id_col, text_col, shingle_k, num_hashes, bands, minhash_hash_fn,
             max_bucket_size=max_bucket_size,
@@ -518,7 +505,6 @@ def dedup_pipeline(
         k=verify_k,
         threshold=verify_threshold,
         max_doc_freq=max_doc_freq,
-        pins=pins,
         mode=verify_mode,
     )
     clusters = dedup_clusters(

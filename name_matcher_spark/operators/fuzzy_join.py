@@ -46,8 +46,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
+from ..cache import pin
 from ..functions.fuzzy import score_candidate_pairs
 from .prepare import soundex4_col
 
@@ -59,20 +59,6 @@ _KEY_COLS = [
     "id", "norm_first", "birth_year", "first_initial", "last_initial",
     "sx_last", "block_key",
 ]
-
-
-def _pin(df: DataFrame, pins: list[DataFrame] | None) -> DataFrame:
-    """Persist (MEMORY_AND_DISK) unless the caller already did, and
-    record in ``pins`` so long-lived callers (streaming micro-batches)
-    can unpersist after materializing. ONE definition — the pinning
-    discipline must not fork per call site."""
-    lvl = df.storageLevel
-    if lvl.useMemory or lvl.useDisk:
-        return df
-    df = df.persist(StorageLevel.MEMORY_AND_DISK)
-    if pins is not None:
-        pins.append(df)
-    return df
 
 
 def _prefixed(df: DataFrame, prefix: str, cols: list[str]) -> DataFrame:
@@ -138,14 +124,9 @@ def candidates_bkey_cascade(
     p1: DataFrame,
     p2: DataFrame,
     max_block_rows: int | None = None,
-    pins: list[DataFrame] | None = None,
 ) -> DataFrame:
     """(l_id, r_id) candidate pairs from the three prioritized block
-    branches, computed over narrow key tables.
-
-    ``pins`` (optional): every DataFrame this call persists is appended
-    so long-lived callers (streaming micro-batches) can unpersist after
-    materializing — otherwise cache entries accumulate per call.
+    branches, computed over narrow key tables (pinned; see cache.py).
     """
 
     # Persist the narrow tables BEFORE anything consumes them: every
@@ -153,15 +134,14 @@ def candidates_bkey_cascade(
     # must read the cache, not re-run the normalization UDF chain — at
     # high parallelism those recomputations run as concurrent Python
     # stages and oversubscribe the executor cores.
-    left = _pin(_prefixed(p1, "l_", _KEY_COLS), pins)
-    right = _pin(_prefixed(p2, "r_", _KEY_COLS), pins)
+    left = pin(_prefixed(p1, "l_", _KEY_COLS))
+    right = pin(_prefixed(p2, "r_", _KEY_COLS))
     fallback_right = right
     if max_block_rows:
         refined = _refine_hot_blocks(left, right, max_block_rows)
         if refined is not None:
             left, right = refined
-            left = _pin(left, pins)
-            right = _pin(right, pins)
+            left, right = pin(left), pin(right)
             # Fallback-branch skew cap, FREE: the fallback keys —
             # (year, li, sx) over the '?' subset in branch 2,
             # (year, fi, li, sx) in branch 3 — partition rows
@@ -273,7 +253,6 @@ def _refine_hot_blocks(
 def candidates_algo7(
     p1: DataFrame,
     p2: DataFrame,
-    pins: list[DataFrame] | None = None,
     max_block_rows: int | None = None,
 ) -> DataFrame:
     """Algorithm-7 candidate pairs (mod.rs:1151-1221): the reference's
@@ -298,15 +277,14 @@ def candidates_algo7(
     candidates_bkey_cascade — the component groupings partition rows
     identically to block_key, so the refinement's hot set IS the cap).
     """
-    left = _pin(_prefixed(p1, "l_", _KEY_COLS), pins)
-    right = _pin(_prefixed(p2, "r_", _KEY_COLS), pins)
+    left = pin(_prefixed(p1, "l_", _KEY_COLS))
+    right = pin(_prefixed(p2, "r_", _KEY_COLS))
     fallback_right = right
     if max_block_rows:
         refined = _refine_hot_blocks(left, right, max_block_rows)
         if refined is not None:
             left, right = refined
-            left = _pin(left, pins)
-            right = _pin(right, pins)
+            left, right = pin(left), pin(right)
             fallback_right = right.filter(~F.col("r_was_hot"))
 
     # 1. exact key, left-outer so unmatched probes feed branch 2.
@@ -362,7 +340,6 @@ def candidates_algo7(
 def match_algo7(
     p1: DataFrame,
     p2: DataFrame,
-    pins: list[DataFrame] | None = None,
     max_block_rows: int | None = 10_000,
 ) -> DataFrame:
     """Algorithm 7 — fuzzy names (no middle) + fuzzy birthdate
@@ -374,8 +351,8 @@ def match_algo7(
     """
     from ..functions.dates import algo7_score, birthdate_similarity_pct
 
-    p1, p2 = _pin(p1, pins), _pin(p2, pins)
-    cands = candidates_algo7(p1, p2, pins=pins, max_block_rows=max_block_rows)
+    p1, p2 = pin(p1), pin(p2)
+    cands = candidates_algo7(p1, p2, max_block_rows=max_block_rows)
     lpay = _prefixed(p1, "l_", _PAYLOAD_COLS)
     rpay = _prefixed(p2, "r_", _PAYLOAD_COLS)
     pairs = cands.join(lpay, "l_id").join(rpay, "r_id")
@@ -435,7 +412,6 @@ def match_fuzzy(
     include_middle: bool,
     blocking: str = "bkey_cascade",
     max_block_rows: int | None = 10_000,
-    pins: list[DataFrame] | None = None,
 ) -> DataFrame:
     """Algorithm 3 (include_middle=True) / 4 (False): candidates ->
     payload join -> birthdate gate -> fuzzy ladder -> matched pairs.
@@ -448,22 +424,22 @@ def match_fuzzy(
     splits the shuffle but cannot cap the pair count inside a block.
     Pass None only for small, trusted inputs.
 
-    ``pins`` collects every DataFrame this call persists (inputs it
-    pinned + internal key tables) so repeat callers — streaming
-    micro-batches — can unpersist once the result is materialized.
+    Every DataFrame this call persists (inputs it pinned + internal key
+    tables) goes through ``cache.pin``: a caller that wraps the
+    materializing action in ``cache_scope()`` releases them all.
     """
     # The prepared tables are consumed twice (narrow key projection +
     # wide payload join); unpersisted, the Python-UDF prepare chain
     # (normalize ×3 + metaphone + soundex) would run twice per side.
     # Persist on the caller's behalf unless they already did — at scale
     # this is the standard "materialize the prepared table once"
-    # discipline (MEMORY_AND_DISK: spills, never recomputes Python).
-    p1, p2 = _pin(p1, pins), _pin(p2, pins)
+    # discipline (memory and disk: spills, never recomputes Python).
+    p1, p2 = pin(p1), pin(p2)
 
     if blocking == "birthdate":
         cands = candidates_birthdate(p1, p2, max_block_rows)
     elif blocking == "bkey_cascade":
-        cands = candidates_bkey_cascade(p1, p2, max_block_rows, pins=pins)
+        cands = candidates_bkey_cascade(p1, p2, max_block_rows)
     else:
         raise ValueError(f"unknown blocking strategy: {blocking}")
 

@@ -24,6 +24,7 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..cache import cache_scope
 from ..operators.clustering import cluster_pairs
 from ..operators.extract import extract_entities
 from ..operators.fuzzy_join import match_fuzzy
@@ -127,32 +128,28 @@ def run_linkage(
     )
     out["prepare_a"], out["prepare_b"] = pa, pb
 
-    # Cache hygiene: match_fuzzy persists its inputs + internal key
-    # tables (the "materialize the prepared table once" discipline).
-    # run_stage materializes the result to parquet and returns the
-    # re-read checkpoint, so those cache entries are dead the moment
-    # the stage completes — collect them via the `pins` hook and drop
-    # them, or a long-lived session issuing many run_linkage calls
-    # accumulates cache entries without bound (the same contract the
-    # streaming micro-batch loop follows, streaming/linkage.py).
-    pins: list[DataFrame] = []
-    pairs = ckpt.run_stage(
-        "pairs_fuzzy",
-        lambda: match_fuzzy(
-            pa,
-            pb,
-            include_middle=cfg.include_middle,
-            blocking=cfg.blocking,
-            max_block_rows=cfg.max_block_rows,
-            pins=pins,
-        ),
-        score_col="confidence",
-        inputs=["prepare_a", "prepare_b", "config"],
-        input_fingerprints={"config": cfg_fp},
-        force=force,
-    )
-    for df in pins:
-        df.unpersist()
+    # Cache hygiene: match_fuzzy pins its inputs + internal key tables
+    # (the "materialize the prepared table once" discipline). run_stage
+    # materializes the result to parquet and returns the re-read
+    # checkpoint, so those cache entries are dead the moment the stage
+    # completes; the scope releases them then, even if the stage
+    # raises, so a long-lived session issuing many run_linkage calls
+    # does not accumulate cache entries.
+    with cache_scope():
+        pairs = ckpt.run_stage(
+            "pairs_fuzzy",
+            lambda: match_fuzzy(
+                pa,
+                pb,
+                include_middle=cfg.include_middle,
+                blocking=cfg.blocking,
+                max_block_rows=cfg.max_block_rows,
+            ),
+            score_col="confidence",
+            inputs=["prepare_a", "prepare_b", "config"],
+            input_fingerprints={"config": cfg_fp},
+            force=force,
+        )
     out["pairs_fuzzy"] = pairs
 
     if "households" in cfg.stages:

@@ -145,14 +145,9 @@ def _ensure_udf_jar() -> str | None:
 
 
 def _register_jvm_udfs(spark: SparkSession) -> None:
-    from pyspark.sql.types import (
-        DoubleType,
-        StringType,
-        StructField,
-        StructType,
-    )
+    from pyspark.sql.types import DoubleType, StringType
 
-    from .functions import fuzzy, normalize, phonetic, similarity
+    from .functions import normalize, phonetic, similarity
 
     try:
         spark.udf.registerJavaFunction(
@@ -182,21 +177,3 @@ def _register_jvm_udfs(spark: SparkSession) -> None:
         phonetic.JVM_DMETA_ENABLED = True
     except Exception:  # noqa: BLE001
         phonetic.JVM_DMETA_ENABLED = False
-    try:
-        spark.udf.registerJavaFunction(
-            "nms_fuzzy_score",
-            "nms.NmsFuzzyScore",
-            StructType(
-                [
-                    StructField("score", DoubleType()),
-                    StructField("label", StringType()),
-                ]
-            ),
-        )
-        # Registered but OFF by default: A/B benchmarking showed the
-        # codegen'd expression ladder + single Java JW call beats the
-        # 11-arg fused UDF (UTF8String->String conversion + Row boxing
-        # costs ~50% more per pair). Kept as an env toggle for repro.
-        fuzzy.JVM_FUSED_ENABLED = os.environ.get("NMS_FUSED", "0") == "1"
-    except Exception:  # noqa: BLE001
-        fuzzy.JVM_FUSED_ENABLED = False

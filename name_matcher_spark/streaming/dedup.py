@@ -28,6 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..cache import cache_scope, pin
 from ..operators.dedup import band_buckets
 
 
@@ -61,9 +62,7 @@ def incremental_dedup(
         if batch_df.isEmpty():
             return
         spark = batch_df.sparkSession
-        buckets = band_buckets(
-            batch_df, id_col, text_col, k, num_hashes, bands, hash_fn
-        ).persist()
+
         def cap_small(df: DataFrame) -> DataFrame:
             # Degenerate-bucket guard, shared by the batch and store
             # sides so the cap semantics cannot silently diverge.
@@ -77,7 +76,12 @@ def incremental_dedup(
             )
             return df.join(small, ["band", "key"], "leftsemi")
 
-        try:
+        with cache_scope():
+            buckets = pin(
+                band_buckets(
+                    batch_df, id_col, text_col, k, num_hashes, bands, hash_fn
+                )
+            )
             joinable = cap_small(buckets)
             new = joinable.select(
                 F.col(id_col).alias("id_b"), "band", "key"
@@ -151,8 +155,6 @@ def incremental_dedup(
                 .partitionBy("batch_id")
                 .parquet(store_dir)
             )
-        finally:
-            buckets.unpersist()
 
     return (
         docs_stream.writeStream.foreachBatch(process)

@@ -15,10 +15,11 @@ partition overwrite) — replaying batch N is idempotent, the standard
 idempotent-foreachBatch pattern.
 
 Per-batch cost discipline: the reference corpus stays pinned across
-batches; everything ELSE match_fuzzy persists for a batch (the batch's
-prepared table, narrow key tables) is collected via its `pins` hook and
-unpersisted after the batch's write — without this, cache entries
-accumulate one set per micro-batch for the life of the job.
+batches; everything ELSE match_fuzzy pins for a batch (the batch's
+prepared table, narrow key tables) belongs to the batch's
+``cache_scope()`` and is unpersisted once the batch's writes finish or
+fail — without this, cache entries accumulate one set per micro-batch
+for the life of the job.
 """
 
 from __future__ import annotations
@@ -26,6 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..cache import cache_scope, pin
 from ..operators.extract import extract_entities
 from ..operators.fuzzy_join import match_fuzzy
 from ..operators.prepare import prepare_persons
@@ -56,27 +58,22 @@ def incremental_linkage(
     starts before the first batch exists. Both writes are idempotent,
     so a retried batch redoes both safely.
     """
-    ref = reference_prepared
-    lvl = ref.storageLevel
-    if not (lvl.useMemory or lvl.useDisk):
-        ref = ref.persist()
+    ref = pin(reference_prepared)
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        prepared = prepare_persons(
-            extract_entities(batch_df).withColumnRenamed("url", "uuid"),
-            include_middle,
-        )
-        pins: list[DataFrame] = []
-        pairs = match_fuzzy(
-            prepared,
-            ref,
-            include_middle=include_middle,
-            max_block_rows=max_block_rows,
-            pins=pins,
-        ).withColumn("batch_id", F.lit(batch_id))
-        try:
+        with cache_scope():
+            prepared = prepare_persons(
+                extract_entities(batch_df).withColumnRenamed("url", "uuid"),
+                include_middle,
+            )
+            pairs = match_fuzzy(
+                prepared,
+                ref,
+                include_middle=include_middle,
+                max_block_rows=max_block_rows,
+            ).withColumn("batch_id", F.lit(batch_id))
             (
                 pairs.write.mode("overwrite")
                 .option("partitionOverwriteMode", "dynamic")
@@ -98,9 +95,6 @@ def incremental_linkage(
                     cluster_labels_dir,
                     cluster_threshold,
                 )
-        finally:
-            for df in pins:
-                df.unpersist()
 
     writer = pages_stream.writeStream.foreachBatch(process).option(
         "checkpointLocation", checkpoint_dir

@@ -187,28 +187,23 @@ def test_dedup_pipeline_dispositions(spark):
 
 
 def test_dedup_pipeline_pins_drain_cache(spark):
-    """The pins hook surfaces the verify tier's cached gram table so
-    long-lived callers can drop it after materializing (the
-    match_fuzzy / run_linkage cache-hygiene contract)."""
+    """Every table dedup_pipeline pins (exact-tier assignment,
+    survivors, LSH candidates, the verify tier's gram tables) belongs
+    to the caller's cache_scope(): once the scope exits, in either
+    verify mode, no cache entry is left."""
+    from name_matcher_spark.cache import cache_scope
     from name_matcher_spark.operators.dedup import dedup_pipeline
 
     rows = [(i, f"document number {i} with some shared words") for i in range(20)]
     df = spark.createDataFrame(rows, "doc_id long, text string")
+    cache_manager = spark._jsparkSession.sharedState().cacheManager()
 
-    def n_cached() -> int:
-        return spark.sparkContext._jsc.sc().getPersistentRDDs().size()
-
-    pins: list = []
-    assert dedup_pipeline(df, pins=pins).count() == 20
-    assert pins, "verify tier should have pinned its gram table"
-    # Relative to the drain: the clustering rounds' localCheckpoint
-    # blocks are reclaimed asynchronously by the ContextCleaner, so an
-    # absolute before/after equality would flake. Draining the pins
-    # must remove at least their own entries.
-    before = n_cached()
-    for d in pins:
-        d.unpersist(blocking=True)
-    assert n_cached() <= before - len(pins)
+    spark.catalog.clearCache()
+    for mode in ("join", "sets"):
+        with cache_scope():
+            assert dedup_pipeline(df, verify_mode=mode).count() == 20
+            assert not cache_manager.isEmpty(), "dedup tiers should pin"
+        assert cache_manager.isEmpty()
 
 
 def test_verify_modes_identical(spark):

@@ -13,6 +13,7 @@ import pytest
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 import __spark_entry__ as entrymod  # noqa: E402
+from name_matcher_spark.cache import cache_scope  # noqa: E402
 from tools.check_oracle import TABLES, value_hash  # noqa: E402
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -49,11 +50,16 @@ def duck():
 @pytest.mark.parametrize(
     "name",
     ["lk_algo1_pairs", "lk_household_pct", "lk_clusters", "txt_langid",
-     "sim_cosine_topk"],
+     "sim_cosine_topk", "lk_fuzzy_pairs", "dd_pipeline", "txt_corpus_e2e"],
 )
 def test_query_matches_oracle(spark, duck, name):
-    sdf = entrymod.queries()[name](spark, SF_DIR)
-    srows = [tuple(r) for r in sdf.collect()]
+    # The query's own pins must not outlive the scope around its
+    # collect; earlier tests' leftovers are cleared first.
+    spark.catalog.clearCache()
+    with cache_scope():
+        sdf = entrymod.queries()[name](spark, SF_DIR)
+        srows = [tuple(r) for r in sdf.collect()]
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
     res = duck.execute(entrymod.oracle_sql()[name])
     ocols = [d[0] for d in res.description]
     orows = res.fetchall()

@@ -191,36 +191,44 @@ def test_stage_chain_invalidates_on_content_edit(spark, tmp_path):
     assert built == [1, 1]
 
 
-def test_repeated_batch_calls_leave_no_cache_entries(spark, tmp_path):
-    """Batch-caller cache hygiene (the streaming loop's `pins` contract,
-    now wired through run_linkage too): repeated match_fuzzy calls with
-    pins drained, and repeated run_linkage calls, must not grow the
-    session's persistent-RDD set — a long-lived batch session issuing
-    many linkage calls would otherwise leak cache entries per call."""
-    from name_matcher_spark.operators.fuzzy_join import match_fuzzy
+def _cache_empty(spark) -> bool:
+    """No entry in the CacheManager (the table of persist()ed plans).
+    localCheckpoint adds none, so this is deterministic in a shared
+    session once the test has cleared the cache itself."""
+    return spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+@pytest.fixture()
+def prepared(spark):
     from name_matcher_spark.operators.prepare import prepare_persons
 
     a_pd, b_pd, _ = make_dirty(200)
-    pa = prepare_persons(spark.createDataFrame(a_pd))
-    pb = prepare_persons(spark.createDataFrame(b_pd))
+    spark.catalog.clearCache()
+    return (
+        prepare_persons(spark.createDataFrame(a_pd)),
+        prepare_persons(spark.createDataFrame(b_pd)),
+        a_pd,
+        b_pd,
+    )
 
-    def n_cached() -> int:
-        return spark.sparkContext._jsc.sc().getPersistentRDDs().size()
 
-    # No-GROWTH, not equality: in a shared session Spark's
-    # ContextCleaner also releases dead entries from earlier tests
-    # concurrently, so the count can legitimately DROP below base.
-    base = n_cached()
+def test_repeated_batch_calls_leave_no_cache_entries(spark, prepared, tmp_path):
+    """Batch-caller cache hygiene: match_fuzzy materialized inside a
+    cache_scope(), and repeated run_linkage calls, leave no cache entry
+    behind — a long-lived batch session issuing many linkage calls
+    would otherwise leak cache entries per call."""
+    from name_matcher_spark.cache import cache_scope
+    from name_matcher_spark.operators.fuzzy_join import match_fuzzy
+
+    pa, pb, a_pd, b_pd = prepared
     for _ in range(3):
-        pins: list = []
-        assert match_fuzzy(pa, pb, include_middle=False, pins=pins).count() > 0
-        assert pins, "match_fuzzy should have pinned its tables"
-        for df in pins:
-            df.unpersist(blocking=True)
-        assert n_cached() <= base
+        with cache_scope():
+            assert match_fuzzy(pa, pb, include_middle=False).count() > 0
+            assert not _cache_empty(spark), "match_fuzzy should pin its tables"
+        assert _cache_empty(spark)
 
-    # run_linkage drains its own pins once the pairs_fuzzy checkpoint
-    # materializes; two full builds (distinct work dirs) -> no growth.
+    # run_linkage scopes its pairs_fuzzy stage; two full builds
+    # (distinct work dirs) -> nothing left.
     cfg = LinkageConfig(stages=("pairs_fuzzy",))
     for d in ("wd1", "wd2"):
         run_linkage(
@@ -229,4 +237,51 @@ def test_repeated_batch_calls_leave_no_cache_entries(spark, tmp_path):
             persons_b=spark.createDataFrame(b_pd),
             config=cfg,
         )
-        assert n_cached() <= base
+        assert _cache_empty(spark)
+
+
+def test_cache_scope_releases_pins_when_the_block_raises(spark, prepared):
+    """match_fuzzy pins its inputs before it validates ``blocking``.
+    Outside a scope those pins stay (the caller owns them); inside one
+    they are released even though the block exits by an exception."""
+    from name_matcher_spark.cache import cache_scope
+    from name_matcher_spark.operators.fuzzy_join import match_fuzzy
+
+    pa, pb, _, _ = prepared
+    with pytest.raises(ValueError, match="unknown blocking"):
+        match_fuzzy(pa, pb, include_middle=False, blocking="nope")
+    assert not _cache_empty(spark)
+    spark.catalog.clearCache()
+
+    with pytest.raises(ValueError, match="unknown blocking"):
+        with cache_scope():
+            match_fuzzy(pa, pb, include_middle=False, blocking="nope")
+    assert _cache_empty(spark)
+
+
+def test_cache_scope_leaves_caller_persisted_frames_alone(spark, prepared):
+    from name_matcher_spark.cache import cache_scope
+    from name_matcher_spark.operators.fuzzy_join import match_fuzzy
+
+    pa, pb, _, _ = prepared
+    pa = pa.persist()
+    with cache_scope():
+        assert match_fuzzy(pa, pb, include_middle=False).count() > 0
+    assert pa.storageLevel.useMemory
+    pa.unpersist()
+    assert _cache_empty(spark)
+
+
+def test_nested_cache_scope_releases_only_its_own_pins(spark, prepared):
+    from name_matcher_spark.cache import cache_scope, pin
+
+    pa, pb, _, _ = prepared
+    with cache_scope():
+        outer = pin(pa)
+        with cache_scope():
+            inner = pin(pb)
+            # already pinned by the outer scope: not the inner one's
+            assert pin(outer) is outer
+        assert outer.storageLevel.useMemory
+        assert not inner.storageLevel.useMemory
+    assert _cache_empty(spark)

@@ -69,6 +69,7 @@ def main() -> int:
     only = set(sys.argv[2:])
 
     import __spark_entry__ as entrymod
+    from name_matcher_spark.cache import cache_scope
     from name_matcher_spark.session import get_spark
 
     unknown = only - set(entrymod.queries())
@@ -93,9 +94,11 @@ def main() -> int:
             continue
         t0 = time.time()
         try:
-            sdf = fn(spark, sf_dir)
-            scols = sdf.columns
-            srows = [tuple(r) for r in sdf.collect()]
+            # each query's pins are released once its rows are collected
+            with cache_scope():
+                sdf = fn(spark, sf_dir)
+                scols = sdf.columns
+                srows = [tuple(r) for r in sdf.collect()]
         except Exception as e:  # noqa: BLE001
             print(f"FAIL  {name}: spark error: {str(e)[:200]}")
             failures += 1
