@@ -3,14 +3,17 @@
 Three normalizations exist in the reference and are reproduced exactly:
 
 1. ``normalize_text`` — Unicode NFD, drop combining marks, lowercase,
-   trim (reference: src/normalize.rs:3-17). Needs Python's
-   ``unicodedata``; exposed as an Arrow-vectorized pandas UDF.
+   trim (reference: src/normalize.rs:3-17). Runs as the compiled Java
+   kernel ``NmsNormalizeText``, whose tables reproduce Python's
+   ``unicodedata``; ``strip_diacritics_lower_trim`` is the scalar
+   mirror.
 2. ``normalize_simple`` — trim, drop ``.``, map ``-`` to space,
    lowercase; NO diacritic stripping, NO inner-space collapsing
    (reference: src/matching/mod.rs:32-45). Pure Spark built-ins.
 3. ``normalize_for_phonetic`` — NFD, keep ASCII letters and single
    spaces, fold ss/ae/o/d specials, lowercase, trim-end (reference:
-   src/matching/mod.rs:54-81). Python, used inside the metaphone UDF.
+   src/matching/mod.rs:54-81). The Double Metaphone Java kernel applies
+   it in-kernel; ``normalize_for_phonetic_py`` is the scalar mirror.
 
 The reference normalizes with (1) before matching on the in-memory
 path but not on the blocked-CPU path (src/matching/mod.rs:1099); its
@@ -23,11 +26,8 @@ from __future__ import annotations
 
 import unicodedata
 
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import StringType
 
 
 def strip_diacritics_lower_trim(s: str | None) -> str | None:
@@ -39,32 +39,12 @@ def strip_diacritics_lower_trim(s: str | None) -> str | None:
     return no_marks.lower().strip()
 
 
-# Flipped by session._register_jvm_udfs when the compiled
-# NmsNormalizeText kernel is on the classpath.
-JVM_NORM_ENABLED = False
-
-
 def normalize_text_col(col: Column) -> Column:
     """normalize_text as a column expression: the compiled Java kernel
-    when registered (keeps the per-record prepare chain fully JVM-side
-    — no Arrow channel), the pandas UDF otherwise. Both are
-    differential-tested against the scalar Python mirror."""
-    if JVM_NORM_ENABLED:
-        return F.call_udf("nms_normalize_text", col)
-    return normalize_text_udf(col)
-
-
-@pandas_udf(StringType())
-def normalize_text_udf(s: pd.Series) -> pd.Series:
-    """Arrow-vectorized normalize_text; computed once per record.
-
-    Distinct-value caching: name columns are highly repetitive, so we
-    normalize unique values only and map back (same effect as the
-    reference's interning, models.rs:16-21, without the bookkeeping).
-    """
-    uniques = s.dropna().unique()
-    mapping = {u: strip_diacritics_lower_trim(u) for u in uniques}
-    return s.map(mapping, na_action="ignore")
+    ``NmsNormalizeText``, which keeps the per-record prepare chain
+    fully JVM-side (no Arrow channel). Differential-tested against
+    the scalar Python mirror ``strip_diacritics_lower_trim``."""
+    return F.call_udf("nms_normalize_text", col)
 
 
 def normalize_simple_py(s: str | None) -> str:

@@ -18,11 +18,6 @@ but the implementation accepts arbitrary ASCII.
 
 from __future__ import annotations
 
-# Flipped by session._register_jvm_udfs when the compiled NmsSoundex4 /
-# NmsDoubleMetaphone kernels are on the classpath.
-JVM_SX_ENABLED = False
-JVM_DMETA_ENABLED = False
-
 VOWELS = "AEIOUY"
 SILENT_STARTS = ("GN", "KN", "PN", "WR", "PS")
 L_R_N_M_B_H_F_V_W_SPACE = ("L", "R", "N", "M", "B", "H", "F", "V", "W", " ")

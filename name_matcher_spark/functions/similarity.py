@@ -1,4 +1,4 @@
-"""Similarity kernels: Levenshtein percent (JVM) and Jaro-Winkler (Arrow UDF).
+"""Similarity kernels: Levenshtein percent and Jaro-Winkler (both JVM).
 
 Levenshtein parity trap (reference src/matching/mod.rs:47-52): the
 DISTANCE counts Unicode chars (strsim), but the percent DENOMINATOR is
@@ -10,6 +10,10 @@ Jaro-Winkler parity (strsim 0.11.1, the reference's dependency):
 standard Jaro on chars, then ``jw = jaro + prefix * 0.1 * (1 - jaro)``
 with common prefix capped at 4 and NO 0.7 boost threshold (strsim
 applies the boost unconditionally, unlike Winkler's original / rapidfuzz).
+The pipeline scores it with the Java kernel (``jw_pct_expr``);
+``jaro_winkler_pct_udf`` is an Arrow-batched numpy version of the same
+function, kept for the ``bench.py`` warm-up and tested against the
+scalar mirror ``jaro_winkler``.
 """
 
 from __future__ import annotations
@@ -228,15 +232,9 @@ def _jaro_winkler_pct_udf(a: pd.Series, b: pd.Series) -> pd.Series:
 # nodes over the same inputs).
 jaro_winkler_pct_udf = _jaro_winkler_pct_udf.asNondeterministic()
 
-# Set True by session._register_jvm_udfs when the compiled Java kernel
-# (javaudf/NmsJaroWinkler.java, strsim parity) is registered; the
-# scoring path then stays entirely JVM-side.
-JVM_JW_ENABLED = False
-
 
 def jw_pct_expr(a: Column, b: Column) -> Column:
-    """Jaro-Winkler percent: JVM kernel when available, else the
-    Arrow-batched numpy kernel."""
-    if JVM_JW_ENABLED:
-        return F.call_udf("nms_jw_pct", a, b)
-    return jaro_winkler_pct_udf(a, b)
+    """Jaro-Winkler percent as the compiled Java kernel
+    (javaudf/NmsJaroWinkler.java, strsim parity): the scoring path
+    stays entirely JVM-side."""
+    return F.call_udf("nms_jw_pct", a, b)

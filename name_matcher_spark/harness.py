@@ -1591,8 +1591,9 @@ def dd_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic overlap ladder spanning exact-dup down to ~0.3
     Jaccard (a suffix's gram set is ~a subset, so Jaccard ~ 1 - cut),
     putting real positives on BOTH sides of the truth threshold. Ground truth = planted pairs with exact 5-gram Jaccard
-    >= 0.6 (ngram_jaccard_pairs in candidates mode — exact, no
-    doc-freq cut). Reports, per method over the extended corpus:
+    >= 0.6 (ngram_jaccard_pairs over the planted pairs as candidates —
+    exact, no doc-freq cut). Reports, per method over the extended
+    corpus:
     candidate volume, truth size, covered truth, recall@0.6 — the
     band/row (4x2 minhash) and hamming<=3 (simhash) operating points.
     Mirrors lk_blocking_quality's shape for blocking strategies."""
@@ -3551,8 +3552,8 @@ def _crawl_fetches(spark: SparkSession, sf_dir: str) -> DataFrame:
     # near-dups), and no constant template run reaches 13 chars — the
     # property that keeps the 13-gram universe content-specific. (The
     # normalized glue " hh: bio: p" is 11 chars; a longer constant run
-    # would put template-only grams in EVERY doc and send the verify
-    # gram join quadratic — measured 157 s with an 18-char run.)
+    # would put template-only grams in EVERY doc — measured 157 s with
+    # an 18-char run under the former exploded gram-join verify.)
     bio = F.concat(
         F.lit("\nBIO: p"), pid.cast("string"),
         F.lit(" city c"), (pid % 50).cast("string"),
@@ -3725,12 +3726,6 @@ def wp_crawl_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
             verify_threshold=0.8,
             max_doc_freq=None,
             minhash_hash_fn="md5",
-            # sets-mode verify: short gram arrays + millions of
-            # candidates is exactly its sweet spot (8.2x over the
-            # exploded gram join here, bit-identical output — the
-            # oracle replays the join formulation and still
-            # hash-matches).
-            verify_mode="sets",
         ).localCheckpoint(eager=False)
 
         kept_ids = disp.filter(F.col("status") == "kept").select(

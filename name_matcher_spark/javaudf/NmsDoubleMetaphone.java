@@ -6,7 +6,7 @@ import java.util.Locale;
 import org.apache.spark.sql.api.java.UDF1;
 
 /**
- * Combined kernel mirroring the pipeline's dmeta_udf:
+ * Combined kernel behind the prepare chain's dmeta column:
  * doubleMetaphone(normalizeForPhonetic(full)) — the Double Metaphone
  * primary code (Lawrence Philips / Apache commons-codec behavior, max
  * length 4; reference rphonetic usage src/matching/mod.rs:83-99) over
@@ -16,7 +16,7 @@ import org.apache.spark.sql.api.java.UDF1;
  * helper, same names) so the two stay diff-able; differential-tested
  * against the Python mirror in tests/test_phonetic.py over golden
  * codes, the fixture name distribution, and random strings. Null
- * input returns "" (matching the pandas UDF's fillna("") contract).
+ * input returns "" (the dmeta column's null contract).
  */
 public class NmsDoubleMetaphone implements UDF1<String, String> {
 

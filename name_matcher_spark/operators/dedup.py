@@ -244,24 +244,23 @@ def ngram_jaccard_pairs(
     k: int = 3,
     threshold: float = 0.6,
     max_doc_freq: int | None = None,
-    mode: str = "join",
 ) -> DataFrame:
     """Exact k-gram Jaccard over candidate pairs (or all pairs when
     candidates is None — test scale only; at production scale ALWAYS
     feed LSH candidates and/or set max_doc_freq).
 
-    ``mode`` picks the physical strategy for the SAME result set:
-
-    - ``"join"`` (default): explode grams, gram equi-join, count —
-      the right shape when documents are long (gram sets too wide to
-      carry as rows) and the stop-gram cut bounds the join fan-out.
-    - ``"sets"``: requires ``candidates``; joins each candidate pair
-      to the two docs' gram ARRAYS and intersects JVM-side
-      (array_intersect, whole-stage codegen). No exploded pair-gram
-      shuffle at all — the win when docs are SHORT and candidate
-      lists are large (crawl entity dedup: measured 8.2x on the
-      verify stage at 2.2M candidates x ~60 grams/doc, identical
-      output).
+    With ``candidates`` each candidate pair joins the two docs' gram
+    ARRAYS and intersects them JVM-side (array_intersect, whole-stage
+    codegen): no exploded pair-gram shuffle at all (crawl entity dedup:
+    measured 8.2x on the verify stage at 2.2M candidates x ~60
+    grams/doc against the exploded gram join it replaced, identical
+    output). ``candidates`` must hold distinct ``(id_a, id_b)`` pairs
+    with ``id_a < id_b``, as ``minhash_lsh_candidates`` emits them:
+    each row is scored as given, so a duplicate yields a duplicate row,
+    a reversed pair comes through reversed, and with ``threshold <= 0``
+    pairs sharing no gram come through at Jaccard 0. Without
+    ``candidates``, one per-gram aggregate + pair explode forms every
+    pair that shares a gram.
 
     ``max_doc_freq`` drops grams appearing in more than that many
     documents BEFORE the join (the classic stopword-shingle cut): such
@@ -269,42 +268,40 @@ def ngram_jaccard_pairs(
     blowup. Jaccard is then over the filtered gram universe — a
     deterministic, documented approximation.
 
-    The gram table this call reuses (it feeds both the sizes
-    aggregate and the pair join) is pinned with ``cache.pin``; a
+    The table this call reuses (the candidate path's gram arrays feed
+    both join sides; the all-pairs path's per-gram aggregate feeds the
+    sizes and the pair counts) is pinned with ``cache.pin``; a
     caller's ``cache_scope()`` around the materializing action
     releases it.
 
-    Returns (id_a, id_b, jaccard) with jaccard >= threshold.
-    intersection via gram equi-join; union = |A| + |B| - inter.
+    Returns (id_a, id_b, jaccard) with jaccard >= threshold;
+    union = |A| + |B| - inter.
     """
     sh = shingles(docs, id_col, text_col, k)
-    # The stop-gram cut as a count + semi join — only for the paths
-    # that need the gram ROWS filtered; the all-pairs join path below
-    # folds the identical cut into its per-gram aggregate for free
-    # (size(ds) IS the doc frequency, sh is distinct per doc).
-    if max_doc_freq is not None and not (mode == "join" and candidates is None):
-        rare = (
-            sh.groupBy("gram")
-            .count()
-            .filter(F.col("count") <= max_doc_freq)
-            .select("gram")
-        )
-        sh = sh.join(rare, "gram", "leftsemi")
-    if mode == "sets":
-        if candidates is None:
-            raise ValueError("mode='sets' requires candidate pairs")
+    if candidates is not None:
         if max_doc_freq is None:
             # r06: the per-doc gram set IS the in-row array — no
-            # explode, no collect_list shuffle. (With a doc-frequency
-            # cut the array must first lose its stop-grams, which needs
-            # the cross-document frequency table — keep the exploded
-            # path for that case.) Intersection/size are order-
-            # insensitive, so the array orders are interchangeable.
+            # explode, no collect_list shuffle. Intersection/size are
+            # order-insensitive, so the array orders are
+            # interchangeable.
             sets = gram_arrays(docs, id_col, text_col, k).withColumnRenamed(
                 "grams", "_g"
             )
         else:
-            sets = sh.groupBy(id_col).agg(F.collect_list("gram").alias("_g"))
+            # With a doc-frequency cut the array must first lose its
+            # stop-grams, which needs the cross-document frequency
+            # table: count + semi join on the gram rows, then regroup.
+            rare = (
+                sh.groupBy("gram")
+                .count()
+                .filter(F.col("count") <= max_doc_freq)
+                .select("gram")
+            )
+            sets = (
+                sh.join(rare, "gram", "leftsemi")
+                .groupBy(id_col)
+                .agg(F.collect_list("gram").alias("_g"))
+            )
         # The gram-array table feeds BOTH sides of the candidate join;
         # unpinned, the whole shingle explode + collect_list aggregate
         # runs twice (the two consumers join on different keys, so no
@@ -322,80 +319,45 @@ def ngram_jaccard_pairs(
             )
             .filter(F.col("jaccard") >= threshold)
         )
-    if mode != "join":
-        raise ValueError(f"unknown verify mode: {mode}")
-    if candidates is None:
-        # All-pairs variant rewritten as ONE per-gram aggregate + pair
-        # explode (r06, guide §2.3 "aggregate before you shuffle" /
-        # §2.4): the old a JOIN b ON gram shuffled the exploded gram
-        # table TWICE more (once per join side, after the doc-frequency
-        # semi join's own shuffle) and then re-aggregated the pair
-        # stream. Grouping doc ids per gram needs a single shuffle, the
-        # doc-frequency cut becomes a free size(ds) filter on the
-        # aggregate (no separate count + semi join), and sorted-list
-        # combinations emit exactly the id_a < id_b pair stream the
-        # join produced — identical pairs, identical counts, identical
-        # Jaccard. 3 shuffles total vs 5 + join machinery.
-        by_gram = sh.groupBy("gram").agg(
-            F.sort_array(F.collect_list(F.col(id_col))).alias("ds")
+    # All pairs as ONE per-gram aggregate + pair explode (r06, guide
+    # §2.3 "aggregate before you shuffle" / §2.4): the old a JOIN b ON
+    # gram shuffled the exploded gram table TWICE more (once per join
+    # side, after the doc-frequency semi join's own shuffle) and then
+    # re-aggregated the pair stream. Grouping doc ids per gram needs a
+    # single shuffle, the doc-frequency cut becomes a free size(ds)
+    # filter on the aggregate (size(ds) IS the doc frequency: sh is
+    # distinct per doc), and sorted-list combinations emit exactly the
+    # id_a < id_b pair stream the join produced — identical pairs,
+    # identical counts, identical Jaccard. 3 shuffles total vs 5 + join
+    # machinery.
+    by_gram = sh.groupBy("gram").agg(
+        F.sort_array(F.collect_list(F.col(id_col))).alias("ds")
+    )
+    if max_doc_freq is not None:
+        by_gram = by_gram.filter(F.size("ds") <= max_doc_freq)
+    # by_gram feeds both the per-doc sizes and the pair counts.
+    by_gram = pin(by_gram)
+    sizes = (
+        by_gram.select(F.explode("ds").alias(id_col))
+        .groupBy(id_col)
+        .agg(F.count("*").alias("n"))
+    )
+    ds = F.col("ds")
+    combos = F.flatten(
+        F.transform(
+            ds,
+            lambda x, i: F.transform(
+                F.slice(ds, i + F.lit(2), F.size(ds)),
+                lambda y: F.struct(x.alias("id_a"), y.alias("id_b")),
+            ),
         )
-        if max_doc_freq is not None:
-            by_gram = by_gram.filter(F.size("ds") <= max_doc_freq)
-        # by_gram feeds both the per-doc sizes and the pair counts.
-        by_gram = pin(by_gram)
-        sizes = (
-            by_gram.select(F.explode("ds").alias(id_col))
-            .groupBy(id_col)
-            .agg(F.count("*").alias("n"))
-        )
-        ds = F.col("ds")
-        combos = F.flatten(
-            F.transform(
-                ds,
-                lambda x, i: F.transform(
-                    F.slice(ds, i + F.lit(2), F.size(ds)),
-                    lambda y: F.struct(x.alias("id_a"), y.alias("id_b")),
-                ),
-            )
-        )
-        inter = (
-            by_gram.select(F.explode(combos).alias("p"))
-            .select("p.id_a", "p.id_b")
-            .groupBy("id_a", "id_b")
-            .agg(F.count("*").alias("inter"))
-        )
-        na = sizes.select(F.col(id_col).alias("id_a"), F.col("n").alias("na"))
-        nb = sizes.select(F.col(id_col).alias("id_b"), F.col("n").alias("nb"))
-        return (
-            inter.join(na, "id_a")
-            .join(nb, "id_b")
-            .withColumn(
-                "jaccard",
-                F.col("inter") / (F.col("na") + F.col("nb") - F.col("inter")),
-            )
-            .filter(F.col("jaccard") >= threshold)
-            .select("id_a", "id_b", "jaccard")
-        )
-    sh = pin(sh)
-    sizes = sh.groupBy(id_col).agg(F.count("*").alias("n"))
-
-    a = sh.select(F.col(id_col).alias("id_a"), "gram")
-    b = sh.select(F.col(id_col).alias("id_b"), "gram")
-    if candidates is not None:
-        # Prune BEFORE the gram self-join: Catalyst will not push a semi
-        # join below an aggregation, so filtering after groupBy would
-        # still generate (and aggregate) the full quadratic gram-pair
-        # stream. Restricting each side to docs that appear in some
-        # candidate shrinks the join inputs (broadcast semi joins — the
-        # candidate id set is small next to the corpus)…
-        a = a.join(candidates.select("id_a").distinct(), "id_a", "leftsemi")
-        b = b.join(candidates.select("id_b").distinct(), "id_b", "leftsemi")
-    pair_grams = a.join(b, "gram").filter(F.col("id_a") < F.col("id_b"))
-    if candidates is not None:
-        # …and the pair-level semi join runs on the exploded stream
-        # UPSTREAM of the aggregate, so only candidate pairs are counted.
-        pair_grams = pair_grams.join(candidates, ["id_a", "id_b"], "leftsemi")
-    inter = pair_grams.groupBy("id_a", "id_b").agg(F.count("*").alias("inter"))
+    )
+    inter = (
+        by_gram.select(F.explode(combos).alias("p"))
+        .select("p.id_a", "p.id_b")
+        .groupBy("id_a", "id_b")
+        .agg(F.count("*").alias("inter"))
+    )
     na = sizes.select(F.col(id_col).alias("id_a"), F.col("n").alias("na"))
     nb = sizes.select(F.col(id_col).alias("id_b"), F.col("n").alias("nb"))
     return (
@@ -422,7 +384,6 @@ def dedup_pipeline(
     max_doc_freq: int | None = 100,
     method: str = "propagate",
     minhash_hash_fn: str = "xxhash64",
-    verify_mode: str = "join",
     max_bucket_size: int | None = None,
 ) -> DataFrame:
     """The tiered dedup pipeline as ONE lazy plan — the module
@@ -442,8 +403,9 @@ def dedup_pipeline(
 
     At 100 TB each tier's cost profile is what makes the order matter:
     tier 1 is one shuffle on a 16-byte key and typically removes the
-    bulk; tiers 2-3 never form all-pairs (bucket join + candidate-
-    restricted gram join); tier 4's graph is bounded by verified pairs.
+    bulk; tiers 2-3 never form all-pairs (bucket join + per-candidate
+    gram-array intersection); tier 4's graph is bounded by verified
+    pairs.
     ``max_bucket_size`` (production: set it; None keeps exact oracle
     semantics) additionally caps any DEGENERATE LSH bucket —
     boilerplate-collapsed signatures — before the tier-2 self-join;
@@ -486,11 +448,15 @@ def dedup_pipeline(
         )
     )
 
-    # The candidate set is consumed once in 'sets' verify mode but
-    # three times in 'join' mode (two id-level semi joins + the
-    # pair-level semi join) — and its own LSH plan (signature agg +
+    # The verify tier reads the candidate set once, but
+    # connected_components builds its undirected edge table as
+    # e.union(swapped e), so `verified` — and through it the candidate
+    # set — is evaluated twice. Its own LSH plan (signature agg +
     # bucket self-join + distinct) is the most expensive subtree in the
-    # pipeline. Pin it so verification never re-runs MinHash.
+    # pipeline; pin it so the second evaluation never re-runs MinHash.
+    # Measured on perfbench crawl_dedup (4 cores, medians of 8
+    # interleaved pairs): wall_s 22.15 s pinned vs 25.17 s unpinned,
+    # slower unpinned in 8 of 8 pairs.
     cands = pin(
         minhash_lsh_candidates(
             surv, id_col, text_col, shingle_k, num_hashes, bands, minhash_hash_fn,
@@ -505,7 +471,6 @@ def dedup_pipeline(
         k=verify_k,
         threshold=verify_threshold,
         max_doc_freq=max_doc_freq,
-        mode=verify_mode,
     )
     clusters = dedup_clusters(
         surv, verified.select("id_a", "id_b"), id_col, text_col, method

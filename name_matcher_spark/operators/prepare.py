@@ -2,63 +2,35 @@
 (src/matching/mod.rs:1583-1602, 1045-1071) as a single projection.
 
 Computed ONCE per record before any join (the reference precomputes the
-same values per record to avoid per-pair recomputation; here that also
-keeps the pair hot path JVM-only except Jaro-Winkler). All Python work
-is Arrow-batched with distinct-value caching.
+same values per record to avoid per-pair recomputation). normalize_text,
+soundex4 and Double Metaphone run as the compiled Java kernels
+registered by ``session.get_spark``, so the prepare chain contains no
+Python and never crosses the Arrow channel.
 """
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import StringType
 
 from ..functions.normalize import (
-    normalize_for_phonetic_py,
     normalize_simple_col,
     normalize_text_col,
     simple_full_col,
 )
-from ..functions.phonetic import double_metaphone, soundex4
-
-
-@pandas_udf(StringType())
-def soundex4_udf(s: pd.Series) -> pd.Series:
-    uniques = s.dropna().unique()
-    mapping = {u: soundex4(u) for u in uniques}
-    return s.map(mapping, na_action="ignore").fillna("0000")
 
 
 def soundex4_col(col: Column) -> Column:
-    """soundex4 as a column expression: compiled Java kernel when
-    registered (JVM-side, no Arrow), pandas UDF fallback. Null input
-    codes to '0000' in both (the kernel is invoked on nulls)."""
-    from ..functions import phonetic
-
-    if phonetic.JVM_SX_ENABLED:
-        return F.call_udf("nms_soundex4", col)
-    return soundex4_udf(col)
-
-
-@pandas_udf(StringType())
-def dmeta_udf(full: pd.Series) -> pd.Series:
-    """double_metaphone(normalize_for_phonetic(full)) — mod.rs:83-99."""
-    uniques = full.dropna().unique()
-    mapping = {u: double_metaphone(normalize_for_phonetic_py(u)) for u in uniques}
-    return full.map(mapping, na_action="ignore").fillna("")
+    """soundex4 (``functions.phonetic.soundex4``) as the compiled Java
+    kernel. Null input codes to '0000' (the kernel is invoked on
+    nulls)."""
+    return F.call_udf("nms_soundex4", col)
 
 
 def dmeta_col(col: Column) -> Column:
-    """Double Metaphone as a column expression: compiled Java kernel
-    when registered (the LAST Python in the prepare chain), pandas UDF
-    fallback. Null input codes to '' in both."""
-    from ..functions import phonetic
-
-    if phonetic.JVM_DMETA_ENABLED:
-        return F.call_udf("nms_dmeta", col)
-    return dmeta_udf(col)
+    """double_metaphone(normalize_for_phonetic(full)) — mod.rs:83-99 —
+    as the compiled Java kernel. Null input codes to ''."""
+    return F.call_udf("nms_dmeta", col)
 
 
 def first_alpha_initial(col: Column) -> Column:
@@ -80,10 +52,8 @@ def prepare_persons(df: DataFrame, include_middle: bool = True) -> DataFrame:
       dmeta — Double Metaphone primary code of `full`
       birth_year, first_initial, last_initial, sx_last, block_key
 
-    One shuffle-free projection. With the compiled kernels registered
-    (NmsNormalizeText / NmsSoundex4 / NmsDoubleMetaphone) the prepare
-    chain contains ZERO Python; without the jar everything falls back
-    to Arrow pandas UDFs with distinct-value caches.
+    One shuffle-free projection with zero Python: the compiled kernels
+    (NmsNormalizeText / NmsSoundex4 / NmsDoubleMetaphone) run JVM-side.
     """
     out = (
         df.withColumn("norm_first", normalize_text_col(F.col("first_name")))

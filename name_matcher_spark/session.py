@@ -3,9 +3,10 @@
 Defaults encode the scale posture required at 100 TB: AQE on (runtime
 join-side selection + skew-join splitting replaces the reference's
 hand-rolled "count both tables, index the smaller" heuristic,
-src/matching/mod.rs:3400-3403), Arrow transfer on (all scoring kernels
-are pandas UDFs over Arrow batches), and shuffle partitions sized for
-the local harness but overridable for a real cluster.
+src/matching/mod.rs:3400-3403), the compiled JVM kernels
+(normalize_text, soundex4, Double Metaphone, Jaro-Winkler) on the
+classpath and registered, and shuffle partitions sized for the local
+harness but overridable for a real cluster.
 """
 
 from __future__ import annotations
@@ -46,6 +47,11 @@ def get_spark(
     On a real cluster these same configs apply; only ``master`` and the
     partition count change (spark-submit sets master, and
     ``NMS_SHUFFLE_PARTITIONS`` should be ~2-3x total cores).
+
+    From a source checkout the session loads the kernel jar (built from
+    ``javaudf/*.java`` when stale); a deployed package expects it from
+    ``--jars``. Either way the four Java kernels are registered here,
+    and a missing class raises here rather than at the first query.
     """
     master = master or os.environ.get("NMS_MASTER", "local[*]")
     n_shuffle = shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS
@@ -94,7 +100,7 @@ def get_spark(
         # are orders of magnitude above either bound, so this only
         # affects the small-input tail.
         .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
-        # Arrow channel for every pandas UDF (scoring kernels).
+        # Arrow channel for the remaining pandas UDFs.
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         .config("spark.sql.shuffle.partitions", str(n_shuffle))
@@ -107,73 +113,54 @@ def get_spark(
         .config("spark.executorEnv.PYTHONPATH", pythonpath)
     )
     jar = _ensure_udf_jar()
-    if jar:
+    if jar is not None:
         builder = builder.config("spark.jars", jar)
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    # Always attempt JVM-kernel registration: the class may come from
-    # the locally-built jar OR from `spark-submit --jars` (where the
-    # tools/ build helper isn't shipped). Both failures are caught and
-    # flip the pandas-UDF fallback flags.
     _register_jvm_udfs(spark)
     return spark
 
 
 def _ensure_udf_jar() -> str | None:
-    """Compile (if stale) and return the JVM scoring-kernel jar.
+    """Compile (if stale) and return the JVM kernel jar.
 
-    The Jaro-Winkler kernel runs as a Java UDF so the fuzzy ladder's
-    pair scoring is 100% JVM — benchmarking here showed the Arrow
+    normalize_text, soundex4, Double Metaphone and Jaro-Winkler run as
+    Java UDFs so the per-record prepare chain and the fuzzy ladder's
+    pair scoring stay 100% JVM — benchmarking here showed the Arrow
     JVM<->Python channel capping throughput regardless of cores, while
-    pure-JVM stages scale with the slot count. On a cluster, ship the
-    jar with --jars.
+    pure-JVM stages scale with the slot count.
+
+    Only a source checkout (``tools/build_java_udfs.py`` beside the
+    package) builds the jar here. When the package is loaded from a
+    ``--py-files`` zip or an install, the deployment ships the jar with
+    ``--jars``: this returns None and leaves ``spark.jars`` alone, and
+    ``_register_jvm_udfs`` raises if a kernel class is missing.
     """
-    try:
-        import sys
+    import sys
 
-        tools = str(Path(_PKG_PARENT) / "tools")
-        if tools not in sys.path:
-            sys.path.insert(0, tools)
-        from build_java_udfs import build  # type: ignore[import-not-found]
-
-        jar = build()
-        return str(jar) if jar else None
-    except Exception:  # noqa: BLE001 - fall back to the pandas UDF path
+    tools = Path(_PKG_PARENT) / "tools"
+    if not (tools / "build_java_udfs.py").is_file():
         return None
+    if str(tools) not in sys.path:
+        sys.path.insert(0, str(tools))
+    from build_java_udfs import build  # type: ignore[import-not-found]
+
+    return str(build())
 
 
 def _register_jvm_udfs(spark: SparkSession) -> None:
+    """Register the four Java kernels under the names the column
+    helpers call (``nms_jw_pct``, ``nms_normalize_text``,
+    ``nms_soundex4``, ``nms_dmeta``). A class missing from the
+    classpath raises."""
     from pyspark.sql.types import DoubleType, StringType
 
-    from .functions import normalize, phonetic, similarity
-
-    try:
-        spark.udf.registerJavaFunction(
-            "nms_jw_pct", "nms.NmsJaroWinkler", DoubleType()
-        )
-        similarity.JVM_JW_ENABLED = True
-    except Exception:  # noqa: BLE001
-        similarity.JVM_JW_ENABLED = False
-    try:
-        spark.udf.registerJavaFunction(
-            "nms_normalize_text", "nms.NmsNormalizeText", StringType()
-        )
-        normalize.JVM_NORM_ENABLED = True
-    except Exception:  # noqa: BLE001
-        normalize.JVM_NORM_ENABLED = False
-    try:
-        spark.udf.registerJavaFunction(
-            "nms_soundex4", "nms.NmsSoundex4", StringType()
-        )
-        phonetic.JVM_SX_ENABLED = True
-    except Exception:  # noqa: BLE001
-        phonetic.JVM_SX_ENABLED = False
-    try:
-        spark.udf.registerJavaFunction(
-            "nms_dmeta", "nms.NmsDoubleMetaphone", StringType()
-        )
-        phonetic.JVM_DMETA_ENABLED = True
-    except Exception:  # noqa: BLE001
-        phonetic.JVM_DMETA_ENABLED = False
+    for name, cls, rtype in (
+        ("nms_jw_pct", "nms.NmsJaroWinkler", DoubleType()),
+        ("nms_normalize_text", "nms.NmsNormalizeText", StringType()),
+        ("nms_soundex4", "nms.NmsSoundex4", StringType()),
+        ("nms_dmeta", "nms.NmsDoubleMetaphone", StringType()),
+    ):
+        spark.udf.registerJavaFunction(name, cls, rtype)

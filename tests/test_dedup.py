@@ -188,9 +188,9 @@ def test_dedup_pipeline_dispositions(spark):
 
 def test_dedup_pipeline_pins_drain_cache(spark):
     """Every table dedup_pipeline pins (exact-tier assignment,
-    survivors, LSH candidates, the verify tier's gram tables) belongs
-    to the caller's cache_scope(): once the scope exits, in either
-    verify mode, no cache entry is left."""
+    survivors, LSH candidates, the verify tier's gram arrays) belongs
+    to the caller's cache_scope(): once the scope exits, no cache entry
+    is left."""
     from name_matcher_spark.cache import cache_scope
     from name_matcher_spark.operators.dedup import dedup_pipeline
 
@@ -199,30 +199,33 @@ def test_dedup_pipeline_pins_drain_cache(spark):
     cache_manager = spark._jsparkSession.sharedState().cacheManager()
 
     spark.catalog.clearCache()
-    for mode in ("join", "sets"):
-        with cache_scope():
-            assert dedup_pipeline(df, verify_mode=mode).count() == 20
-            assert not cache_manager.isEmpty(), "dedup tiers should pin"
-        assert cache_manager.isEmpty()
+    with cache_scope():
+        assert dedup_pipeline(df).count() == 20
+        assert not cache_manager.isEmpty(), "dedup tiers should pin"
+    assert cache_manager.isEmpty()
 
 
-def test_verify_modes_identical(spark):
-    """mode='sets' (array_intersect over gram arrays, no exploded
-    pair-gram shuffle) must produce bit-identical (id_a, id_b, jaccard)
-    to the exploded-join formulation the DuckDB oracles replay."""
+@pytest.mark.parametrize("max_doc_freq", [None, 10])
+def test_candidate_verify_matches_all_pairs(spark, max_doc_freq):
+    """The candidate verify (array_intersect over per-doc gram arrays;
+    with a doc-frequency cap the arrays are first regrouped from the
+    capped gram rows) must produce bit-identical (id_a, id_b, jaccard)
+    to the all-pairs aggregate semi-joined to the same candidates."""
     rows = [
         (i, f"shared prefix text number {i % 5} plus unique tail {i}")
         for i in range(40)
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
     cands = minhash_lsh_candidates(df, k=5, hash_fn="md5")
-    j = ngram_jaccard_pairs(df, candidates=cands, k=3, threshold=0.3)
-    s = ngram_jaccard_pairs(df, candidates=cands, k=3, threshold=0.3, mode="sets")
-    assert sorted(map(tuple, j.collect())) == sorted(map(tuple, s.collect()))
-    assert j.count() > 0  # the comparison is not vacuous
-
-    with pytest.raises(ValueError):
-        ngram_jaccard_pairs(df, candidates=None, mode="sets").count()
+    got = ngram_jaccard_pairs(
+        df, candidates=cands, k=3, threshold=0.3, max_doc_freq=max_doc_freq
+    )
+    want = ngram_jaccard_pairs(
+        df, k=3, threshold=0.3, max_doc_freq=max_doc_freq
+    ).join(cands, ["id_a", "id_b"], "leftsemi")
+    got_rows = sorted(map(tuple, got.collect()))
+    assert got_rows == sorted(map(tuple, want.collect()))
+    assert got_rows  # the comparison is not vacuous
 
 
 def test_minhash_bucket_cap_drops_degenerate_buckets(spark):

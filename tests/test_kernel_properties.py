@@ -9,7 +9,6 @@ CPython's tables that the curated corpora missed should surface here.
 
 from __future__ import annotations
 
-import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
@@ -47,21 +46,9 @@ PAIRS = st.lists(
 )
 
 
-def _require_kernels():
-    from name_matcher_spark.functions import normalize, phonetic
-
-    if not (
-        normalize.JVM_NORM_ENABLED
-        and phonetic.JVM_SX_ENABLED
-        and phonetic.JVM_DMETA_ENABLED
-    ):
-        pytest.skip("JVM kernels not registered (jar build unavailable)")
-
-
 @given(TEXTS)
 @BATCH_SETTINGS
 def test_kernels_match_python_on_arbitrary_unicode(spark, texts):
-    _require_kernels()
     from name_matcher_spark.functions.normalize import (
         normalize_for_phonetic_py,
         strip_diacritics_lower_trim,
@@ -94,9 +81,6 @@ def test_jw_kernel_matches_python_on_arbitrary_unicode(spark, pairs):
     corpora in test_similarity.py only cover name-like text). Both sides
     evaluate the same IEEE expression order, so equality is exact."""
     from name_matcher_spark.functions import similarity
-
-    if not similarity.JVM_JW_ENABLED:
-        pytest.skip("JVM kernels not registered (jar build unavailable)")
 
     df = spark.createDataFrame(pairs, "a string, b string").coalesce(1)
     rows = df.select(

@@ -77,17 +77,10 @@ def test_fuzzy_scoring_single_kernel_eval(spark):
     from name_matcher_spark.operators.fuzzy_join import match_fuzzy
     from name_matcher_spark.operators.prepare import prepare_persons
 
-    from name_matcher_spark.functions import similarity
-
     pa = prepare_persons(harness.persons_a(spark, SF), include_middle=False)
     pb = prepare_persons(harness.persons_b(spark, SF), include_middle=False)
     plan = _plan(match_fuzzy(pa, pb, include_middle=False))
-    # Assert on whichever kernel is ACTIVE — a jar build failure must
-    # not green-wash the barrier via a vacuous 0-count.
-    if similarity.JVM_JW_ENABLED:
-        assert plan.count("nms_jw_pct") == 1
-    else:
-        assert plan.count("_jaro_winkler_pct_udf") == 1
+    assert plan.count("nms_jw_pct") == 1
     assert "Generate explode" in plan
 
 
@@ -112,35 +105,6 @@ def test_registered_ngram_variant_is_capped(spark):
     assert "gram#" not in opt.split("Generate")[0], (
         "gram column flows above the pair explode — self-join shape is back"
     )
-
-
-def test_ngram_candidate_filter_below_aggregate(spark):
-    """With LSH candidates supplied, the candidate semi join must run on
-    the exploded gram-pair stream BELOW the intersection aggregate —
-    Catalyst won't push a semi join through an aggregation, so placing
-    it above would still generate and aggregate the full quadratic
-    stream only to throw it away."""
-    from name_matcher_spark.operators.dedup import ngram_jaccard_pairs
-
-    docs = spark.createDataFrame(
-        [(i, f"document number {i} with some shared text") for i in range(20)],
-        "doc_id long, text string",
-    )
-    cand = spark.createDataFrame(
-        [(1, 2), (3, 4)], "id_a long, id_b long"
-    )
-    plan = (
-        ngram_jaccard_pairs(docs, candidates=cand)
-        ._jdf.queryExecution()
-        .optimizedPlan()
-        .toString()
-    )
-    # In the tree string the inter-count Aggregate (grouping id_a, id_b)
-    # prints before (above) its children; every LeftSemi must appear
-    # below it, none above.
-    agg_pos = plan.index("Aggregate [id_a")
-    semi_pos = plan.index("LeftSemi")
-    assert agg_pos < semi_pos, "candidate semi join sits above the aggregate"
 
 
 def test_overlap_stats_single_lazy_plan(spark):
@@ -171,23 +135,12 @@ def test_broadcast_for_small_dimension(spark):
 
 
 def test_prepare_chain_zero_python(spark):
-    """With the compiled normalize/soundex/metaphone kernels
-    registered, the per-record prepare chain contains ZERO Python nodes
-    — the Arrow channel is the documented scaling ceiling, and the
-    whole per-record path (and with the Java JW, the per-pair path too)
-    now runs JVM-side."""
+    """The per-record prepare chain contains ZERO Python nodes — the
+    Arrow channel is the documented scaling ceiling, so the compiled
+    normalize/soundex/metaphone kernels run the whole per-record path
+    JVM-side (and the Java JW the per-pair path)."""
     from name_matcher_spark import harness
-    from name_matcher_spark.functions import normalize, phonetic
     from name_matcher_spark.operators.prepare import prepare_persons
-
-    if not (
-        normalize.JVM_NORM_ENABLED
-        and phonetic.JVM_SX_ENABLED
-        and phonetic.JVM_DMETA_ENABLED
-    ):
-        import pytest as _pytest
-
-        _pytest.skip("JVM kernels not registered (jar build unavailable)")
 
     plan = _plan(prepare_persons(harness.persons_a(spark, SF)))
     assert "ArrowEvalPython" not in plan
@@ -212,19 +165,10 @@ def test_new_round3_operators_plan_quality(spark):
 def test_wp_crawl_e2e_plan_quality(spark):
     """The crawl-composition chain (URL dedup -> html_to_text ->
     tiered dedup -> extract -> algo1 -> clusters) must keep the
-    crawl-scale plan properties: no Python nodes with the kernels
-    registered, and no cartesian/nested-loop join anywhere."""
-    import pytest as _pytest
-
+    crawl-scale plan properties: no Python nodes, and no
+    cartesian/nested-loop join anywhere."""
     from name_matcher_spark import harness
-    from name_matcher_spark.functions import normalize, phonetic
 
-    if not (
-        normalize.JVM_NORM_ENABLED
-        and phonetic.JVM_SX_ENABLED
-        and phonetic.JVM_DMETA_ENABLED
-    ):
-        _pytest.skip("JVM kernels not registered (jar build unavailable)")
     plan = _plan(harness.wp_crawl_e2e(spark, "/root/testdata/sf0.001"))
     assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
     assert "CartesianProduct" not in plan

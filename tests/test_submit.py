@@ -101,6 +101,71 @@ def test_spark_submit_pyfiles_end_to_end(tmp_path):
     assert manifest.stat().st_mtime_ns == mtime
 
 
+_KERNEL_JOB = """
+import json
+
+from pyspark.sql import functions as F
+
+from name_matcher_spark.functions.normalize import normalize_text_col
+from name_matcher_spark.functions.similarity import jw_pct_expr
+from name_matcher_spark.operators.prepare import dmeta_col, soundex4_col
+from name_matcher_spark.session import get_spark
+
+spark = get_spark(master="inherit")
+row = (
+    spark.createDataFrame([("Ó Súilleabháin", "O Suilleabhain")], "a string, b string")
+    .select(
+        normalize_text_col(F.col("a")).alias("norm"),
+        soundex4_col(F.col("b")).alias("sx"),
+        dmeta_col(F.col("b")).alias("dm"),
+        jw_pct_expr(normalize_text_col(F.col("a")), F.lower(F.col("b"))).alias("jw"),
+    )
+    .first()
+)
+print(json.dumps({"row": row.asDict(), "jars": spark.conf.get("spark.jars", "")}))
+"""
+
+
+@pytest.mark.slow
+def test_spark_submit_job_outside_tools(tmp_path):
+    """A job script of the caller's own, with the package only in the
+    zip and the kernels only in --jars: nothing on sys.path can build
+    the jar, so get_spark must take the kernels from --jars."""
+    sys.path.insert(0, str(REPO / "tools"))
+    from make_pyfiles_zip import build
+
+    zip_path = build(str(tmp_path / "nms.zip"))
+    jar = REPO / "name_matcher_spark" / "javaudf" / "nms-udfs.jar"
+    job = tmp_path / "job.py"
+    job.write_text(_KERNEL_JOB)
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["PYSPARK_PYTHON"] = sys.executable
+    env["PYSPARK_DRIVER_PYTHON"] = sys.executable
+    proc = subprocess.run(
+        [
+            _spark_submit(), "--master", "local[2]",
+            "--py-files", str(zip_path), "--jars", str(jar),
+            "--conf", "spark.ui.enabled=false", str(job),
+        ],
+        cwd=tmp_path, env=env, capture_output=True, text=True, timeout=300,
+    )
+    assert proc.returncode == 0, f"spark-submit failed:\n{proc.stdout[-3000:]}\n{proc.stderr[-3000:]}"
+    out = json.loads(proc.stdout.strip().splitlines()[-1])
+    from name_matcher_spark.functions.normalize import (
+        normalize_for_phonetic_py,
+        strip_diacritics_lower_trim,
+    )
+    from name_matcher_spark.functions.phonetic import double_metaphone, soundex4
+
+    assert out["row"] == {
+        "norm": strip_diacritics_lower_trim("Ó Súilleabháin"),
+        "sx": soundex4("O Suilleabhain"),
+        "dm": double_metaphone(normalize_for_phonetic_py("O Suilleabhain")),
+        "jw": 100.0,
+    }
+    assert out["jars"].endswith("nms-udfs.jar")
+
+
 @pytest.mark.slow
 def test_spark_submit_table_checkpoints(tmp_path):
     """Iceberg-style deploy shape: stages checkpoint to CATALOG TABLES

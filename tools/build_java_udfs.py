@@ -63,6 +63,7 @@ import shutil
 import subprocess
 import sys
 import tempfile
+import warnings
 from pathlib import Path
 
 PKG = Path(__file__).resolve().parents[1] / "name_matcher_spark" / "javaudf"
@@ -82,42 +83,68 @@ def spark_jars_classpath() -> str:
     raise RuntimeError("cannot locate Spark jars for javac classpath")
 
 
-def build(force: bool = False) -> Path | None:
+def build(force: bool = False) -> Path:
+    """Return the kernel jar, recompiling it when a source is newer.
+
+    The jar is tracked in git, and a checkout can leave its mtime older
+    than the sources'. So when ``javac`` is absent, or the recompile
+    fails (e.g. the Spark jars cannot be found), the existing
+    jar is returned as is, with a warning for a failed compile. Without
+    a jar to fall back on, or with ``force``, that raises instead.
+    """
     sources = sorted(PKG.glob("*.java"))
-    if not sources:
-        return None
-    if JAR.exists() and not force:
-        newest_src = max(s.stat().st_mtime for s in sources)
-        if JAR.stat().st_mtime >= newest_src:
-            return JAR
+    newest_src = max((s.stat().st_mtime for s in sources), default=0.0)
+    fallback = JAR.exists() and not force
+    if fallback and JAR.stat().st_mtime >= newest_src:
+        return JAR
     javac = shutil.which("javac")
-    jar_tool = shutil.which("jar")
     if not javac:
-        return None
+        if fallback:
+            return JAR
+        raise RuntimeError(f"cannot build {JAR}: javac is not on PATH")
+    try:
+        _compile(javac, sources)
+    except (OSError, RuntimeError, subprocess.CalledProcessError) as e:
+        if not fallback:
+            raise
+        detail = getattr(e, "stderr", None) or e
+        warnings.warn(f"rebuilding {JAR} failed, using the existing jar: {detail}")
+    return JAR
+
+
+def _compile(javac: str, sources: list[Path]) -> None:
+    """javac + jar into a temp dir; JAR is only overwritten on success."""
+    jar_tool = shutil.which("jar")
     with tempfile.TemporaryDirectory() as tmp:
+        classes = os.path.join(tmp, "classes")
+        out = os.path.join(tmp, JAR.name)
         subprocess.run(
-            [javac, "-cp", spark_jars_classpath(), "-d", tmp]
+            # The sources carry non-ASCII literals ('Ç', 'Ñ'); without
+            # -encoding, javac 17 reads them in the locale's charset and
+            # fails under a POSIX locale.
+            [javac, "-encoding", "UTF-8", "-cp", spark_jars_classpath(), "-d", classes]
             + [str(s) for s in sources],
             check=True,
             capture_output=True,
+            text=True,
         )
         if jar_tool:
             subprocess.run(
-                [jar_tool, "cf", str(JAR), "-C", tmp, "."],
+                [jar_tool, "cf", out, "-C", classes, "."],
                 check=True,
                 capture_output=True,
+                text=True,
             )
         else:  # zip fallback — a jar IS a zip
             import zipfile
 
-            with zipfile.ZipFile(JAR, "w") as zf:
-                for root, _, files in os.walk(tmp):
+            with zipfile.ZipFile(out, "w") as zf:
+                for root, _, files in os.walk(classes):
                     for f in files:
                         full = os.path.join(root, f)
-                        zf.write(full, os.path.relpath(full, tmp))
-    return JAR
+                        zf.write(full, os.path.relpath(full, classes))
+        shutil.copyfile(out, JAR)
 
 
 if __name__ == "__main__":
-    out = build(force="--force" in sys.argv)
-    print(out or "no sources / no javac")
+    print(build(force="--force" in sys.argv))
