@@ -3666,7 +3666,7 @@ def wp_crawl_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).repartition(
         # AQE coalesces this small-by-bytes shuffle to ~1 partition and
         # localCheckpoint PINS that layout — then every downstream
-        # compute-heavy stage (shingle explode, minhash partial aggs,
+        # compute-heavy stage (MinHash band keys, verify gram arrays,
         # extraction regexps) runs single-task no matter how many
         # cores exist (measured: 4->16 cores gave only 1.3x). Rows
         # here are narrow but row-COSTLY; pin the fan-out explicitly.

@@ -36,15 +36,23 @@ def connected_components(
     e = edges.select(
         F.col(src).cast("long").alias("src"), F.col(dst).cast("long").alias("dst")
     ).filter(F.col("src").isNotNull() & F.col("dst").isNotNull())
-    # Undirected: keep both directions once, dedup. Eager checkpoint
-    # (r06): materializing the edge table up front tells us its size,
-    # and the loop below re-plans every round, so the one extra
-    # scheduler round trip buys a SCALE-ADAPTIVE partition count for
-    # all O(diameter) round jobs (guide §2: partitioning derived from
-    # input size, not a constant tuned for either local mode or the
-    # cluster).
+    # Undirected: keep both directions once, dedup. Both directions
+    # come out of ONE pass over `e` (a two-element explode per edge):
+    # a union of `e` with its swap would evaluate the caller's edge
+    # lineage twice — in dedup_pipeline that lineage is the whole
+    # LSH + verify join. Eager checkpoint (r06): materializing the edge
+    # table up front tells us its size, and the loop below re-plans
+    # every round, so the one extra scheduler round trip buys a
+    # SCALE-ADAPTIVE partition count for all O(diameter) round jobs
+    # (guide §2: partitioning derived from input size, not a constant
+    # tuned for either local mode or the cluster).
+    both = F.array(
+        F.struct(F.col("src").alias("src"), F.col("dst").alias("dst")),
+        F.struct(F.col("dst").alias("src"), F.col("src").alias("dst")),
+    )
     bidir = (
-        e.union(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
+        e.select(F.explode(both).alias("_e"))
+        .select("_e.src", "_e.dst")
         .distinct()
         .localCheckpoint(eager=True)
     )

@@ -12,19 +12,23 @@ each tier only sees what the previous one kept:
 Hash modes (minhash and simhash both follow the same dual-mode
 pattern):
 
-* ``xxhash64`` — production default. Per shingle the per-row cost is
-  ``num_hashes`` JVM xxhash64 calls with a LONG min — the cheapest
-  min-wise hash Spark has, and the kernel that dominates dedup cost at
-  100 TB.
-* ``md5`` — oracle mode: md5-of-(gram || seed) with the MIN taken over
-  the HEX STRING ordering. md5 exists in both Spark and DuckDB with
-  identical output, so the whole operator is oracle-checkable, and
-  string-min is as valid a min-wise hash as any integer min. Several×
-  slower than xxhash64 (one digest + 32-char string compare per hash
-  per shingle); registered queries use it so the DuckDB twin replays
-  bit-for-bit.
+* ``xxhash64`` — production default: Spark's ``xxhash64(gram, i)``
+  with a LONG min. Per row one compiled JVM call (``nms_minhash_bands``,
+  javaudf/NmsMinHashBands.java) walks the document's shingles, hashing
+  each gram's bytes once and deriving the ``num_hashes`` family members
+  from that hash, and returns the band keys: no shingle rows, no
+  aggregate, no shuffle.
+* ``md5`` — oracle mode: md5-of-(gram || ':' || i) with the MIN taken
+  over the HEX STRING ordering. md5 exists in both Spark and DuckDB
+  with identical output, so the whole operator is oracle-checkable,
+  and string-min is as valid a min-wise hash as any integer min. The
+  same kernel keeps the minimum over the raw digest bytes (the same
+  order) and hex-encodes only the minima; one digest per hash per
+  shingle still makes it several times slower than xxhash64.
+  Registered queries use it so the DuckDB twin replays bit-for-bit.
 
-Measured A/B at sf0.1 (5,000 docs, local[32], min of 3): candidates
+Measured A/B at sf0.1 (5,000 docs, local[32], min of 3, on the
+shingle-aggregate formulation this kernel replaced): candidates
 3.27 s (xxhash64) vs 10.54 s (md5) — 3.2× — with an IDENTICAL
 high-Jaccard tail (every pair at J>=0.8 found by both modes) and 2.7×
 fewer low-J junk candidates under xxhash64 (392k vs 1.26M at
@@ -114,39 +118,6 @@ def shingles(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text", k:
     return base.select(id_col, F.explode(expr).alias("gram"))
 
 
-def minhash_signatures(
-    sh: DataFrame,
-    id_col: str = "doc_id",
-    num_hashes: int = 8,
-    hash_fn: str = "xxhash64",
-) -> DataFrame:
-    """(doc_id, h0..h{n-1}) MinHash signature columns.
-
-    hash_fn (see module docstring): ``xxhash64`` = min over
-    ``xxhash64(gram, i)`` longs (production); ``md5`` = min over
-    md5(gram || ':' || i) hex strings (oracle-portable to DuckDB).
-
-    One groupBy computes every hash column (partial aggregation
-    map-side; no per-hash shuffle).
-    """
-    if hash_fn == "xxhash64":
-        # The seed column F.lit(i) is hashed along with the gram, so
-        # each of the num_hashes mins draws from an independent hash
-        # family member — no string materialization anywhere.
-        aggs = [
-            F.min(F.xxhash64(F.col("gram"), F.lit(i))).alias(f"h{i}")
-            for i in range(num_hashes)
-        ]
-    elif hash_fn == "md5":
-        aggs = [
-            F.min(F.md5(F.encode(F.concat(F.col("gram"), F.lit(f":{i}")), "UTF-8"))).alias(f"h{i}")
-            for i in range(num_hashes)
-        ]
-    else:
-        raise ValueError(f"unknown hash_fn: {hash_fn}")
-    return sh.groupBy(id_col).agg(*aggs)
-
-
 def band_buckets(
     docs: DataFrame,
     id_col: str = "doc_id",
@@ -159,36 +130,28 @@ def band_buckets(
     """(id, band, key) LSH bucket assignments — one row per doc per
     band. The shared building block of the batch candidate join and the
     streaming incremental dedup's bucket store. The bucket key is a
-    string in BOTH hash modes (long signatures cast explicitly), so the
-    streaming bucket store's schema is mode-independent."""
+    string in BOTH hash modes (long minima printed as
+    ``cast(long as string)``, ``|``-joined within a band), so the
+    streaming bucket store's schema is mode-independent.
+
+    One JVM call per document (``nms_minhash_bands``) computes the
+    MinHash signature over the k-gram shingles and returns the band
+    keys; ``posexplode`` numbers them. Docs shorter than ``k`` (and
+    NULL text) have no shingles and no rows, as in ``shingles``."""
+    if hash_fn not in ("xxhash64", "md5"):
+        raise ValueError(f"unknown hash_fn: {hash_fn}")
     if num_hashes % bands:
         # A remainder would silently compute-and-drop the tail hashes,
         # quietly shifting the LSH operating point the caller asked for.
         raise ValueError(
             f"num_hashes={num_hashes} must be divisible by bands={bands}"
         )
-    rows_per_band = num_hashes // bands
-    # Signatures via the exploded-gram aggregate: A/B'd against a
-    # per-row array_min(transform(...)) formulation (r06) — the
-    # codegen'd partial aggregate computes the hash family in a tight
-    # loop with no intermediate hash arrays and won steady-state by
-    # ~25%; the shingle feed itself is now shuffle-free either way
-    # (array_distinct replaced the cluster-wide distinct).
-    sigs = minhash_signatures(
-        shingles(docs, id_col, text_col, k), id_col, num_hashes, hash_fn
+    base, _ = _gram_base(docs, id_col, text_col, k)
+    keys = F.call_udf(
+        "nms_minhash_bands",
+        F.col("t"), F.lit(k), F.lit(num_hashes), F.lit(bands), F.lit(hash_fn),
     )
-    band_cols = []
-    for b in range(bands):
-        parts = [
-            F.col(f"h{b * rows_per_band + r}").cast("string")
-            for r in range(rows_per_band)
-        ]
-        band_cols.append(
-            F.struct(F.lit(b).alias("band"), F.concat_ws("|", *parts).alias("key"))
-        )
-    return sigs.select(
-        F.col(id_col), F.explode(F.array(*band_cols)).alias("bk")
-    ).select(id_col, F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
+    return base.select(F.col(id_col), F.posexplode(keys).alias("band", "key"))
 
 
 def minhash_lsh_candidates(
@@ -412,8 +375,8 @@ def dedup_pipeline(
     see minhash_lsh_candidates.
 
     Every DataFrame cached on the caller's behalf (the exact-tier
-    assignment, the survivor set, the LSH candidate set, and the verify
-    tier's gram-array/gram tables) is pinned with ``cache.pin``: wrap
+    assignment, the survivor set, and the verify tier's gram-array or
+    per-gram table) is pinned with ``cache.pin``: wrap
     the action that materializes the result in ``cache_scope()``, or
     repeated calls in a long-lived session accumulate cache entries.
     """
@@ -448,20 +411,9 @@ def dedup_pipeline(
         )
     )
 
-    # The verify tier reads the candidate set once, but
-    # connected_components builds its undirected edge table as
-    # e.union(swapped e), so `verified` — and through it the candidate
-    # set — is evaluated twice. Its own LSH plan (signature agg +
-    # bucket self-join + distinct) is the most expensive subtree in the
-    # pipeline; pin it so the second evaluation never re-runs MinHash.
-    # Measured on perfbench crawl_dedup (4 cores, medians of 8
-    # interleaved pairs): wall_s 22.15 s pinned vs 25.17 s unpinned,
-    # slower unpinned in 8 of 8 pairs.
-    cands = pin(
-        minhash_lsh_candidates(
-            surv, id_col, text_col, shingle_k, num_hashes, bands, minhash_hash_fn,
-            max_bucket_size=max_bucket_size,
-        )
+    cands = minhash_lsh_candidates(
+        surv, id_col, text_col, shingle_k, num_hashes, bands, minhash_hash_fn,
+        max_bucket_size=max_bucket_size,
     )
     verified = ngram_jaccard_pairs(
         surv,

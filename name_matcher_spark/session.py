@@ -4,9 +4,9 @@ Defaults encode the scale posture required at 100 TB: AQE on (runtime
 join-side selection + skew-join splitting replaces the reference's
 hand-rolled "count both tables, index the smaller" heuristic,
 src/matching/mod.rs:3400-3403), the compiled JVM kernels
-(normalize_text, soundex4, Double Metaphone, Jaro-Winkler) on the
-classpath and registered, and shuffle partitions sized for the local
-harness but overridable for a real cluster.
+(normalize_text, soundex4, Double Metaphone, Jaro-Winkler, MinHash
+band keys) on the classpath and registered, and shuffle partitions
+sized for the local harness but overridable for a real cluster.
 """
 
 from __future__ import annotations
@@ -50,7 +50,7 @@ def get_spark(
 
     From a source checkout the session loads the kernel jar (built from
     ``javaudf/*.java`` when stale); a deployed package expects it from
-    ``--jars``. Either way the four Java kernels are registered here,
+    ``--jars``. Either way the five Java kernels are registered here,
     and a missing class raises here rather than at the first query.
     """
     master = master or os.environ.get("NMS_MASTER", "local[*]")
@@ -126,11 +126,12 @@ def get_spark(
 def _ensure_udf_jar() -> str | None:
     """Compile (if stale) and return the JVM kernel jar.
 
-    normalize_text, soundex4, Double Metaphone and Jaro-Winkler run as
-    Java UDFs so the per-record prepare chain and the fuzzy ladder's
-    pair scoring stay 100% JVM — benchmarking here showed the Arrow
-    JVM<->Python channel capping throughput regardless of cores, while
-    pure-JVM stages scale with the slot count.
+    normalize_text, soundex4, Double Metaphone, Jaro-Winkler and the
+    MinHash band keys run as Java UDFs so the per-record prepare chain,
+    the fuzzy ladder's pair scoring and the LSH tier stay 100% JVM —
+    benchmarking here showed the Arrow JVM<->Python channel capping
+    throughput regardless of cores, while pure-JVM stages scale with
+    the slot count.
 
     Only a source checkout (``tools/build_java_udfs.py`` beside the
     package) builds the jar here. When the package is loaded from a
@@ -151,16 +152,17 @@ def _ensure_udf_jar() -> str | None:
 
 
 def _register_jvm_udfs(spark: SparkSession) -> None:
-    """Register the four Java kernels under the names the column
+    """Register the five Java kernels under the names the column
     helpers call (``nms_jw_pct``, ``nms_normalize_text``,
-    ``nms_soundex4``, ``nms_dmeta``). A class missing from the
-    classpath raises."""
-    from pyspark.sql.types import DoubleType, StringType
+    ``nms_soundex4``, ``nms_dmeta``, ``nms_minhash_bands``). A class
+    missing from the classpath raises."""
+    from pyspark.sql.types import ArrayType, DoubleType, StringType
 
     for name, cls, rtype in (
         ("nms_jw_pct", "nms.NmsJaroWinkler", DoubleType()),
         ("nms_normalize_text", "nms.NmsNormalizeText", StringType()),
         ("nms_soundex4", "nms.NmsSoundex4", StringType()),
         ("nms_dmeta", "nms.NmsDoubleMetaphone", StringType()),
+        ("nms_minhash_bands", "nms.NmsMinHashBands", ArrayType(StringType())),
     ):
         spark.udf.registerJavaFunction(name, cls, rtype)

@@ -64,6 +64,26 @@ def test_connected_components_chain(spark):
     assert len(got) == 20
 
 
+def test_connected_components_reads_edges_once(spark):
+    """Both edge directions come from one pass over the input: the
+    caller's edge lineage (in dedup_pipeline, the whole verify join) is
+    evaluated once, not once per direction."""
+    sc = spark.sparkContext
+    reads = sc.accumulator(0)
+    rows = [(1, 2), (2, 3), (10, 11), (5, 5), (2, 1)]
+
+    def counted(r):
+        reads.add(1)
+        return r
+
+    edges = spark.createDataFrame(
+        sc.parallelize(rows, 2).map(counted), "src long, dst long"
+    )
+    got = {(r.node, r.cluster_id) for r in connected_components(edges).collect()}
+    assert got == {(1, 1), (2, 1), (3, 1), (10, 10), (11, 10), (5, 5)}
+    assert reads.value == len(rows)
+
+
 def test_cluster_pairs_namespaces(spark):
     pairs = spark.createDataFrame(
         [(1, 7, 1.0), (2, 7, 1.0), (3, 9, 0.5)],

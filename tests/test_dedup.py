@@ -452,3 +452,63 @@ def test_lsh_parameter_validation(spark):
         band_buckets(docs, num_hashes=8, bands=3).collect()
     with pytest.raises(ValueError, match="pigeonhole"):
         simhash_near_dupes(docs, max_hamming=4).collect()
+
+
+def _band_buckets_aggregate(docs, k, num_hashes, bands, hash_fn):
+    """The shingle-explode + min-aggregate formulation `band_buckets`
+    replaced, kept as the differential reference for the kernel."""
+    sh = shingles(docs, k=k)
+    if hash_fn == "xxhash64":
+        hashes = [F.xxhash64(F.col("gram"), F.lit(i)) for i in range(num_hashes)]
+    else:
+        hashes = [
+            F.md5(F.encode(F.concat(F.col("gram"), F.lit(f":{i}")), "UTF-8"))
+            for i in range(num_hashes)
+        ]
+    sigs = sh.groupBy("doc_id").agg(
+        *[F.min(h).alias(f"h{i}") for i, h in enumerate(hashes)]
+    )
+    r = num_hashes // bands
+    band_cols = [
+        F.struct(
+            F.lit(b).alias("band"),
+            F.concat_ws(
+                "|", *[F.col(f"h{b * r + j}").cast("string") for j in range(r)]
+            ).alias("key"),
+        )
+        for b in range(bands)
+    ]
+    return sigs.select("doc_id", F.explode(F.array(*band_cols)).alias("bk")).select(
+        "doc_id", "bk.band", "bk.key"
+    )
+
+
+UNICODE_DOCS = [
+    (1, "the quick brown fox jumps over the lazy dog"),
+    (2, "Ó Súilleabháin\tand\nStraße — grüße æøå"),
+    (3, "emoji 😀😀 and 𝔘𝔫𝔦𝔠𝔬𝔡𝔢 math letters 𠀀𠀁 cjk ext b"),
+    (4, "combining é ä ộ marks éé"),
+    (5, "aaaaaaaaaaaaaaaaaaaaaaaaaaaaaa"),           # one repeated gram
+    (6, None),
+    (7, "ab"),                                        # shorter than every k
+    (8, "😀𝔘́ \t\n x"),                            # 5 code points after norm
+    (9, "  tabs\t\tand\n\nnewlines  collapse  to one space  "),
+    (10, "abcdefghijklm"),                            # exactly 13 chars
+]
+
+
+@pytest.mark.parametrize("hash_fn", ["xxhash64", "md5"])
+@pytest.mark.parametrize("k", [3, 5, 13])
+@pytest.mark.parametrize("num_hashes,bands", [(8, 4), (12, 3)])
+def test_band_buckets_kernel_matches_aggregate(spark, hash_fn, k, num_hashes, bands):
+    from name_matcher_spark.operators.dedup import band_buckets
+
+    docs = spark.createDataFrame(UNICODE_DOCS, "doc_id long, text string")
+    got = band_buckets(
+        docs, k=k, num_hashes=num_hashes, bands=bands, hash_fn=hash_fn
+    ).collect()
+    want = _band_buckets_aggregate(docs, k, num_hashes, bands, hash_fn).collect()
+    assert sorted(map(tuple, got)) == sorted(map(tuple, want))
+    ids = {r.doc_id for r in got}
+    assert 6 not in ids and 7 not in ids
+    assert len(got) == len(ids) * bands

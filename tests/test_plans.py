@@ -69,6 +69,19 @@ def test_dedup_and_text_paths_jvm_only(spark):
         assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
 
 
+@pytest.mark.parametrize("hash_fn", ["xxhash64", "md5"])
+def test_band_buckets_single_kernel_no_shuffle(spark, hash_fn):
+    """MinHash band keys are one compiled call per document: no
+    shingle explode, no signature aggregate, no shuffle, no Python."""
+    from name_matcher_spark.operators.dedup import band_buckets
+
+    docs = spark.read.parquet(f"{SF}/documents.parquet")
+    plan = _plan(band_buckets(docs, hash_fn=hash_fn))
+    assert plan.count("nms_minhash_bands(") == 1, plan
+    for node in ("Exchange", "HashAggregate", "ArrowEvalPython", "BatchEvalPython"):
+        assert node not in plan, plan
+
+
 def test_fuzzy_scoring_single_kernel_eval(spark):
     """The Generate barrier keeps the JW kernel at exactly one
     evaluation per row (CollapseProject would otherwise inline it into

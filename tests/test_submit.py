@@ -108,6 +108,7 @@ from pyspark.sql import functions as F
 
 from name_matcher_spark.functions.normalize import normalize_text_col
 from name_matcher_spark.functions.similarity import jw_pct_expr
+from name_matcher_spark.operators.dedup import band_buckets
 from name_matcher_spark.operators.prepare import dmeta_col, soundex4_col
 from name_matcher_spark.session import get_spark
 
@@ -122,8 +123,34 @@ row = (
     )
     .first()
 )
-print(json.dumps({"row": row.asDict(), "jars": spark.conf.get("spark.jars", "")}))
+bands = band_buckets(
+    spark.createDataFrame([(1, BAND_TEXT)], "doc_id long, text string"),
+    hash_fn="md5",
+).orderBy("band")
+print(json.dumps({
+    "row": row.asDict(),
+    "bands": [r.key for r in bands.collect()],
+    "jars": spark.conf.get("spark.jars", ""),
+}))
 """
+
+# Already in normal form (lower case, single spaces), so the
+# pure-Python reference below needs no normalization.
+_BAND_TEXT = "ó súilleabháin 😀 agus"
+
+
+def _md5_band_keys(t: str, k: int = 5, num_hashes: int = 8, bands: int = 4):
+    """MinHash band keys in md5 mode, from hashlib: code-point k-grams,
+    hex-string min of md5(gram ':' i) per hash, '|'-joined per band."""
+    import hashlib
+
+    grams = [t[i:i + k] for i in range(len(t) - k + 1)]
+    mins = [
+        min(hashlib.md5(f"{g}:{i}".encode()).hexdigest() for g in grams)
+        for i in range(num_hashes)
+    ]
+    r = num_hashes // bands
+    return ["|".join(mins[b * r:(b + 1) * r]) for b in range(bands)]
 
 
 @pytest.mark.slow
@@ -137,7 +164,7 @@ def test_spark_submit_job_outside_tools(tmp_path):
     zip_path = build(str(tmp_path / "nms.zip"))
     jar = REPO / "name_matcher_spark" / "javaudf" / "nms-udfs.jar"
     job = tmp_path / "job.py"
-    job.write_text(_KERNEL_JOB)
+    job.write_text(f"BAND_TEXT = {_BAND_TEXT!r}\n" + _KERNEL_JOB)
     env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
     env["PYSPARK_PYTHON"] = sys.executable
     env["PYSPARK_DRIVER_PYTHON"] = sys.executable
@@ -163,6 +190,7 @@ def test_spark_submit_job_outside_tools(tmp_path):
         "dm": double_metaphone(normalize_for_phonetic_py("O Suilleabhain")),
         "jw": 100.0,
     }
+    assert out["bands"] == _md5_band_keys(_BAND_TEXT)
     assert out["jars"].endswith("nms-udfs.jar")
 
 
