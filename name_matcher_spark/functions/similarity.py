@@ -10,10 +10,10 @@ Jaro-Winkler parity (strsim 0.11.1, the reference's dependency):
 standard Jaro on chars, then ``jw = jaro + prefix * 0.1 * (1 - jaro)``
 with common prefix capped at 4 and NO 0.7 boost threshold (strsim
 applies the boost unconditionally, unlike Winkler's original / rapidfuzz).
-The pipeline scores it with the Java kernel (``jw_pct_expr``);
-``jaro_winkler_pct_udf`` is an Arrow-batched numpy version of the same
-function, kept for the ``bench.py`` warm-up and tested against the
-scalar mirror ``jaro_winkler``.
+The pipeline scores it with the Java kernel (``jw_pct_expr``), tested
+against the scalar mirror ``jaro_winkler``. ``jaro_winkler_pct_udf``
+maps that mirror over an Arrow batch; the benchmark scripts run it
+once to start the Python worker pool before timing.
 """
 
 from __future__ import annotations
@@ -92,145 +92,15 @@ def jaro_winkler(a: str, b: str) -> float:
     return min(sj + prefix * 0.1 * (1.0 - sj), 1.0)
 
 
-_MAX_W = 96  # codepoint cap for the vectorized kernel; longer -> fallback
-
-
-def _to_codepoint_matrix(values: "np.ndarray") -> tuple["np.ndarray", "np.ndarray"]:
-    """(n,) unicode array -> ((n, _MAX_W) uint32 codepoints 0-padded,
-    (n,) int32 lengths). numpy's fixed-width UCS4 storage IS the
-    codepoint matrix — no per-row Python."""
-    import numpy as np
-
-    mat = values.astype(f"U{_MAX_W}").view(np.uint32).reshape(len(values), _MAX_W)
-    lengths = (mat != 0).argmin(axis=1).astype(np.int32)
-    # rows with no zero padding are exactly _MAX_W long
-    full = (mat != 0).all(axis=1)
-    lengths[full] = _MAX_W
-    return mat, lengths
-
-
-def jaro_winkler_batch(a_list: "np.ndarray", b_list: "np.ndarray") -> "np.ndarray":
-    """Vectorized strsim-parity Jaro-Winkler over two string arrays.
-
-    The greedy match scan runs as a double loop over character
-    POSITIONS (bounded by the longest string in the batch), with every
-    operation vectorized across the batch rows — no per-row Python.
-    This is the Arrow-batch analogue of the reference's fused GPU
-    kernel (mod.rs:1304-1359, MAX_STR cap at mod.rs:1258).
-    """
-    import numpy as np
-
-    n = len(a_list)
-    if n == 0:
-        return np.empty(0, dtype=np.float64)
-    amat, la = _to_codepoint_matrix(a_list)
-    bmat, lb = _to_codepoint_matrix(b_list)
-    la_max = int(la.max()) if n else 0
-    lb_max = int(lb.max()) if n else 0
-
-    out = np.zeros(n, dtype=np.float64)
-    equal = (la == lb) & (amat == bmat).all(axis=1)
-    out[equal] = 1.0
-    nonzero = (la > 0) & (lb > 0) & ~equal
-    if nonzero.any():
-        window = np.maximum(np.maximum(la, lb) // 2 - 1, 0)
-        b_taken = np.zeros_like(bmat, dtype=bool)
-        a_seq = np.zeros((n, la_max), dtype=np.uint32)
-        cnt_a = np.zeros(n, dtype=np.int32)
-        for i in range(la_max):
-            found = np.zeros(n, dtype=bool)
-            a_i = amat[:, i]
-            row_ok = nonzero & (i < la) & (a_i != 0)
-            lo = i - window
-            hi = np.minimum(lb, i + window + 1)
-            for j in range(lb_max):
-                elig = (
-                    row_ok
-                    & ~found
-                    & (j >= lo)
-                    & (j < hi)
-                    & ~b_taken[:, j]
-                    & (bmat[:, j] == a_i)
-                )
-                if elig.any():
-                    b_taken[elig, j] = True
-                    rows = np.nonzero(elig)[0]
-                    a_seq[rows, cnt_a[rows]] = a_i[rows]
-                    cnt_a[rows] += 1
-                    found |= elig
-        m = cnt_a.astype(np.float64)
-        # b-side matched chars in j order, then transposition count.
-        b_seq = np.zeros_like(a_seq)
-        cnt_b = np.zeros(n, dtype=np.int32)
-        for j in range(lb_max):
-            rows = np.nonzero(b_taken[:, j])[0]
-            if len(rows):
-                b_seq[rows, cnt_b[rows]] = bmat[rows, j]
-                cnt_b[rows] += 1
-        k = np.arange(la_max)[None, :]
-        diff = (a_seq != b_seq) & (k < cnt_a[:, None])
-        trans = diff.sum(axis=1) // 2
-        has_m = nonzero & (cnt_a > 0)
-        mm = np.where(m > 0, m, 1.0)
-        jaro_v = (
-            m / np.maximum(la, 1) + m / np.maximum(lb, 1) + (m - trans) / mm
-        ) / 3.0
-        out[has_m] = jaro_v[has_m]
-    # Winkler prefix boost (unconditional, strsim semantics), cap 1.0.
-    prefix_eq = (amat[:, :4] == bmat[:, :4]) & (amat[:, :4] != 0)
-    prefix = prefix_eq.argmin(axis=1)
-    prefix[prefix_eq.all(axis=1)] = 4
-    boosted = out + prefix * 0.1 * (1.0 - out)
-    result = np.where(equal, 1.0, np.minimum(boosted, 1.0))
-    result[(la == 0) | (lb == 0)] = 0.0
-    result[equal] = 1.0
-    return result
-
-
 @pandas_udf(DoubleType())
-def _jaro_winkler_pct_udf(a: pd.Series, b: pd.Series) -> pd.Series:
-    """Batched JW * 100 over Arrow via the numpy kernel; strings longer
-    than the kernel's codepoint cap fall back to the scalar mirror."""
-    import numpy as np
-
-    af = a.fillna("").to_numpy(dtype=object)
-    bf = b.fillna("").to_numpy(dtype=object)
-    a_arr = np.asarray(af, dtype="str")
-    b_arr = np.asarray(bf, dtype="str")
-    # Unique-pair dedup at C speed: name distributions are heavy-tailed,
-    # so candidate batches repeat the same pairs many times. The key is
-    # LENGTH-PREFIXED ("{len(a)}\x1f{a}{b}"): a bare separator would be
-    # ambiguous for names that themselves contain it (normalize_text
-    # passes control chars through), collapsing two distinct pairs onto
-    # one key and scoring one of them wrong. Equal keys <=> equal
-    # (len(a), a+b) <=> equal (a, b).
-    keys = np.char.add(
-        np.char.add(
-            np.char.mod("%d\x1f", np.char.str_len(a_arr))
-            if len(a_arr)
-            else a_arr,
-            a_arr,
-        ),
-        b_arr,
+def jaro_winkler_pct_udf(a: pd.Series, b: pd.Series) -> pd.Series:
+    """``jaro_winkler * 100`` per row of an Arrow batch; NULL scores as
+    the empty string."""
+    return pd.Series(
+        [jaro_winkler(x, y) * 100.0 for x, y in zip(a.fillna(""), b.fillna(""))],
+        index=a.index,
+        dtype="float64",
     )
-    _, first_idx, inverse = np.unique(keys, return_index=True, return_inverse=True)
-    ua, ub = a_arr[first_idx], b_arr[first_idx]
-    lens_a = np.char.str_len(ua) if len(ua) else np.empty(0, dtype=int)
-    lens_b = np.char.str_len(ub) if len(ub) else np.empty(0, dtype=int)
-    long_mask = (lens_a > _MAX_W) | (lens_b > _MAX_W)
-    uscores = jaro_winkler_batch(ua, ub) * 100.0
-    if long_mask.any():
-        for i in np.nonzero(long_mask)[0]:
-            uscores[i] = jaro_winkler(str(ua[i]), str(ub[i])) * 100.0
-    return pd.Series(uscores[inverse], index=a.index, dtype="float64")
-
-
-# Marked non-deterministic ON PURPOSE (it is deterministic): stops the
-# optimizer from collapsing projections through it and evaluating the
-# expensive kernel twice (once under the match-case filter, again in
-# the score projection — observed in .explain as two ArrowEvalPython
-# nodes over the same inputs).
-jaro_winkler_pct_udf = _jaro_winkler_pct_udf.asNondeterministic()
 
 
 def jw_pct_expr(a: Column, b: Column) -> Column:

@@ -154,6 +154,23 @@ def band_buckets(
     return base.select(F.col(id_col), F.posexplode(keys).alias("band", "key"))
 
 
+def cap_buckets(buckets: DataFrame, max_bucket_size: int | None) -> DataFrame:
+    """The degenerate-bucket skew guard: drop every (band, key) bucket
+    with more than ``max_bucket_size`` rows. None keeps every bucket.
+    The one definition of the cap, used by ``minhash_lsh_candidates``
+    and by both the batch and the store side of
+    ``streaming.dedup.incremental_dedup``."""
+    if max_bucket_size is None:
+        return buckets
+    small = (
+        buckets.groupBy("band", "key")
+        .agg(F.count("*").alias("_n"))
+        .filter(F.col("_n") <= max_bucket_size)
+        .select("band", "key")
+    )
+    return buckets.join(small, ["band", "key"], "leftsemi")
+
+
 def minhash_lsh_candidates(
     docs: DataFrame,
     id_col: str = "doc_id",
@@ -180,15 +197,10 @@ def minhash_lsh_candidates(
     bounded by cap × |buckets|. Deterministic, documented recall
     trade; None (default) keeps the exact oracle-checked semantics.
     """
-    buckets = band_buckets(docs, id_col, text_col, k, num_hashes, bands, hash_fn)
-    if max_bucket_size is not None:
-        small = (
-            buckets.groupBy("band", "key")
-            .agg(F.count("*").alias("_n"))
-            .filter(F.col("_n") <= max_bucket_size)
-            .select("band", "key")
-        )
-        buckets = buckets.join(small, ["band", "key"], "leftsemi")
+    buckets = cap_buckets(
+        band_buckets(docs, id_col, text_col, k, num_hashes, bands, hash_fn),
+        max_bucket_size,
+    )
     left = buckets.select(F.col(id_col).alias("id_a"), "band", "key")
     right = buckets.select(F.col(id_col).alias("id_b"), "band", "key")
     return (

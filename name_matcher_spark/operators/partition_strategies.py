@@ -13,6 +13,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..streaming.batches import overwrite_partitions
+
 
 def last_initial_key(last_name: Column) -> Column:
     """A-Z shard of the (normalized) last name; non-alpha -> 'other'
@@ -50,9 +52,7 @@ def write_partitioned(df: DataFrame, path: str, strategy: str = "last_initial") 
     calls this again — completed shards survive. (Static overwrite —
     the Spark default — would wipe the whole path first, making
     per-shard resume impossible.)"""
-    with_partition_key(df, strategy).write.mode("overwrite").option(
-        "partitionOverwriteMode", "dynamic"
-    ).partitionBy("part_key").parquet(path)
+    overwrite_partitions(with_partition_key(df, strategy), path, "part_key")
 
 
 def salted_repartition(

@@ -20,7 +20,7 @@ every completed stage (tests/test_pipeline.py exercises exactly that).
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -42,7 +42,6 @@ class LinkageConfig:
     household_threshold: float = 0.95
     cluster_threshold: float = 0.95
     stages: tuple = ("pairs_fuzzy", "households", "clusters")
-    extra: dict = field(default_factory=dict)
 
 
 def run_linkage(

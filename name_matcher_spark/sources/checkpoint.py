@@ -26,28 +26,21 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
-def fingerprint_df(df: DataFrame, content: bool = True) -> dict:
+def fingerprint_df(df: DataFrame) -> dict:
     """Content fingerprint of an external input.
 
-    ``content=True`` (default) folds an order-insensitive content
-    digest in — an additive multiset hash, SUM of xxhash64 over every
-    column carried in decimal(38,0) — so edited rows or reordered
-    sources invalidate the checkpoint even when row count and schema
-    are preserved. An additive (sum) fold is used deliberately instead
-    of bit_xor: xor cancels identical rows with even multiplicity
-    (editing a value shared by two duplicate rows X,X -> Y,Y keeps an
-    xor digest unchanged), and duplicate rows are routine in this
-    dedup-centric domain; a sum tracks multiplicity exactly. The
-    decimal(38,0) carrier is ANSI-overflow-safe: |xxhash64| < 2^63 ≈
-    9.3e18, so even 10^18 rows sum to < 1e37 < 1e38. Count + digest
-    run as ONE aggregation job.
-
-    ``content=False`` drops to row count + schema only: the right call
-    when the input is a snapshot/metadata read on a real lake and a
-    full-column scan per resume is too expensive — with the explicit
-    caveat that content-preserving edits then go undetected."""
-    if not content:
-        return {"row_count": df.count(), "schema": df.schema.simpleString()}
+    Row count, schema and an order-insensitive content digest — an
+    additive multiset hash, SUM of xxhash64 over every column carried
+    in decimal(38,0) — so edited rows or reordered sources invalidate
+    the checkpoint even when row count and schema are preserved. An
+    additive (sum) fold is used deliberately instead of bit_xor: xor
+    cancels identical rows with even multiplicity (editing a value
+    shared by two duplicate rows X,X -> Y,Y keeps an xor digest
+    unchanged), and duplicate rows are routine in this dedup-centric
+    domain; a sum tracks multiplicity exactly. The decimal(38,0)
+    carrier is ANSI-overflow-safe: |xxhash64| < 2^63 ≈ 9.3e18, so even
+    10^18 rows sum to < 1e37 < 1e38. Count + digest run as ONE
+    aggregation job."""
     row = df.agg(
         F.count(F.lit(1)).alias("n"),
         F.sum(

@@ -33,6 +33,7 @@ from ..operators.clustering import (
     decode_components,
     encode_edges,
 )
+from .batches import start_batches
 
 
 @contextlib.contextmanager
@@ -79,9 +80,9 @@ def apply_cluster_batch(
     """One wave of the incremental-clustering merge: fold a batch of
     (id_1, id_2, confidence) pairs into the label store at
     ``labels_dir``. Idempotent (min-label components are absorbing), so
-    both the streaming foreachBatch and an in-line caller (the
-    long-lived linkage query folds clustering into its own batch; see
-    streaming/linkage.py) can retry it safely.
+    both ``incremental_clusters`` and ``incremental_linkage`` (which
+    folds each batch's pairs in when given ``cluster_labels_dir``) can
+    retry it safely.
 
     Poison records: encode_edges FAILS the batch on a null or
     out-of-range id (deliberate — silently dropping an edge corrupts
@@ -144,14 +145,7 @@ def incremental_clusters(
     def process(batch_df: DataFrame, batch_id: int) -> None:
         apply_cluster_batch(batch_df, labels_dir, threshold)
 
-    writer = pairs_stream.writeStream.foreachBatch(process).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    # else: default ASAP micro-batch trigger (long-lived mode) — the
-    # trigger API rejects availableNow=False explicitly.
-    return writer.start()
+    return start_batches(pairs_stream, process, checkpoint_dir, available_now)
 
 
 def read_clusters(spark, labels_dir: str) -> DataFrame:

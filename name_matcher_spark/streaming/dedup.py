@@ -11,10 +11,12 @@ operator `minhash_lsh_candidates` produces on the full corpus —
 incremental processing changes WHEN a pair is found (when its second
 member arrives), never WHETHER.
 
-Idempotence: both the pair sink and the bucket store partition by
-`batch_id` with dynamic partition overwrite, so a retried batch
-rewrites its own partitions instead of duplicating rows (same pattern
-as streaming/linkage.py).
+Both operators start through ``streaming.batches``: drain mode with
+``available_now=True``, a long-lived query with False. The pair sink,
+the bucket store and the line store are all written with its
+idempotent batch sink (partition ``batch_id``, dynamic overwrite), so
+a retried batch rewrites its own partitions instead of duplicating
+rows.
 
 Scale posture: the store grows with the corpus but the per-batch join
 is a hash equi-join on (band, key) — the batch side is small, AQE
@@ -28,8 +30,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..cache import cache_scope, pin
-from ..operators.dedup import band_buckets
+from ..cache import pin
+from ..operators.dedup import band_buckets, cap_buckets
+from .batches import path_exists, read_batches, start_batches, write_batch
 
 
 def incremental_dedup(
@@ -59,109 +62,44 @@ def incremental_dedup(
     semantics the invariant test asserts."""
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         spark = batch_df.sparkSession
-
-        def cap_small(df: DataFrame) -> DataFrame:
-            # Degenerate-bucket guard, shared by the batch and store
-            # sides so the cap semantics cannot silently diverge.
-            if max_bucket_size is None:
-                return df
-            small = (
-                df.groupBy("band", "key")
-                .agg(F.count("*").alias("_n"))
-                .filter(F.col("_n") <= max_bucket_size)
-                .select("band", "key")
+        buckets = pin(
+            band_buckets(batch_df, id_col, text_col, k, num_hashes, bands, hash_fn)
+        )
+        joinable = cap_buckets(buckets, max_bucket_size)
+        new = joinable.select(F.col(id_col).alias("id_b"), "band", "key")
+        # new-vs-new inside the batch
+        pairs = (
+            joinable.select(F.col(id_col).alias("id_a"), "band", "key")
+            .join(new, ["band", "key"])
+            .filter(F.col("id_a") < F.col("id_b"))
+            .select("id_a", "id_b")
+        )
+        # Missing store == first batch, checked explicitly: any OTHER
+        # read failure (corrupt parquet, transient IO) must fail the
+        # batch so the checkpoint retries, instead of silently dropping
+        # every accumulated bucket.
+        if path_exists(spark, store_dir):
+            store = cap_buckets(
+                read_batches(spark, store_dir, buckets.schema).filter(
+                    F.col("batch_id") < batch_id
+                ),
+                max_bucket_size,
             )
-            return df.join(small, ["band", "key"], "leftsemi")
-
-        with cache_scope():
-            buckets = pin(
-                band_buckets(
-                    batch_df, id_col, text_col, k, num_hashes, bands, hash_fn
-                )
-            )
-            joinable = cap_small(buckets)
-            new = joinable.select(
-                F.col(id_col).alias("id_b"), "band", "key"
-            )
-            # new-vs-new inside the batch
-            self_pairs = (
-                joinable.select(F.col(id_col).alias("id_a"), "band", "key")
+            cross_pairs = (
+                store.select(F.col(id_col).alias("id_a"), "band", "key")
                 .join(new, ["band", "key"])
-                .filter(F.col("id_a") < F.col("id_b"))
-                .select("id_a", "id_b")
+                .filter(F.col("id_a") != F.col("id_b"))
+                .select(
+                    F.least("id_a", "id_b").alias("id_a"),
+                    F.greatest("id_a", "id_b").alias("id_b"),
+                )
             )
-            # Missing store == first batch, checked explicitly: any
-            # OTHER read failure (corrupt parquet, transient IO) must
-            # fail the batch so the checkpoint retries, instead of
-            # silently dropping every accumulated bucket. The check goes
-            # through the Hadoop FileSystem for store_dir's OWN scheme —
-            # a driver-local os.path.exists is always False for a remote
-            # store URI (s3://, hdfs://), which would silently disable
-            # cross-batch dedup for the engine's stated deploy target.
-            jvm = spark._jvm
-            store_path = jvm.org.apache.hadoop.fs.Path(store_dir)
-            store_fs = store_path.getFileSystem(
-                spark._jsc.hadoopConfiguration()
-            )
-            if store_fs.exists(store_path):
-                # Explicit schema (buckets + the batch_id partition
-                # column): a crashed partial first write can leave the
-                # dir existing with zero committed data files, and
-                # schema inference would then wedge every retry with
-                # UNABLE_TO_INFER_SCHEMA (same hazard as the linkage
-                # sink read-back).
-                from pyspark.sql.types import LongType, StructField, StructType
+            pairs = pairs.unionByName(cross_pairs)
+        write_batch(pairs.distinct(), output_dir, batch_id)
+        write_batch(buckets, store_dir, batch_id)
 
-                # fresh StructType: DataFrame.schema is cached on the
-                # DataFrame object and StructType.add mutates in place —
-                # buckets.schema.add(...) would quietly grow a phantom
-                # batch_id column onto buckets' own cached schema
-                store_schema = StructType(
-                    list(buckets.schema.fields)
-                    + [StructField("batch_id", LongType())]
-                )
-                store = cap_small(
-                    spark.read.schema(store_schema)
-                    .parquet(store_dir)
-                    .filter(F.col("batch_id") < batch_id)
-                )
-                cross_pairs = (
-                    store.select(F.col(id_col).alias("id_a"), "band", "key")
-                    .join(new, ["band", "key"])
-                    .filter(F.col("id_a") != F.col("id_b"))
-                    .select(
-                        F.least("id_a", "id_b").alias("id_a"),
-                        F.greatest("id_a", "id_b").alias("id_b"),
-                    )
-                )
-                pairs = self_pairs.unionByName(cross_pairs)
-            else:
-                pairs = self_pairs
-            (
-                pairs.distinct()
-                .withColumn("batch_id", F.lit(batch_id))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("batch_id")
-                .parquet(output_dir)
-            )
-            (
-                buckets.withColumn("batch_id", F.lit(batch_id))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("batch_id")
-                .parquet(store_dir)
-            )
-
-    return (
-        docs_stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=available_now)
-        .start()
-    )
+    return start_batches(docs_stream, process, checkpoint_dir, available_now)
 
 
 def incremental_line_store(
@@ -195,25 +133,15 @@ def incremental_line_store(
     from ..operators.dedup import exploded_lines
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        (
+        write_batch(
             exploded_lines(batch_df, id_col, text_col, hash_fn)
             .groupBy("k")
-            .agg(F.countDistinct(id_col).alias("nd"))
-            .withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(store_dir)
+            .agg(F.countDistinct(id_col).alias("nd")),
+            store_dir,
+            batch_id,
         )
 
-    return (
-        docs_stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=available_now)
-        .start()
-    )
+    return start_batches(docs_stream, process, checkpoint_dir, available_now)
 
 
 def clean_with_line_store(

@@ -154,8 +154,6 @@ def test_content_digest_catches_value_edit(spark):
     # order-insensitive: same rows, different order -> same digest
     c = spark.createDataFrame([(2, "y"), (1, "x")], "id long, v string")
     assert fingerprint_df(c)["content_digest"] == fa["content_digest"]
-    # cheap mode documented: no digest key
-    assert "content_digest" not in fingerprint_df(a, content=False)
     # even-multiplicity edit: a value shared by TWO duplicate rows
     # changes on both (X,X -> Y,Y). An xor-fold digest cancels this
     # (h^h == g^g == 0); the additive multiset digest must not.

@@ -66,19 +66,29 @@ def test_jaro_winkler_known():
     assert jaro_winkler("x", "x") == 1.0
 
 
-def test_jw_udf_pair_key_unambiguous_with_control_chars():
-    """The batch kernel's unique-pair dedup key is length-prefixed:
-    pairs ('x\\x1f', 'y') and ('x', '\\x1fy') must score independently,
-    not collapse onto one key."""
-    import pandas as pd
+def test_jw_pct_udf_matches_scalar_mirror(spark):
+    """The pandas UDF is the scalar mirror times 100, row for row: NULL
+    scores as the empty string, non-ASCII compares by code point, and a
+    string longer than 96 code points is scored whole."""
+    from name_matcher_spark.functions.similarity import jaro_winkler_pct_udf
 
-    from name_matcher_spark.functions.similarity import (
-        _jaro_winkler_pct_udf,
-        jaro_winkler,
-    )
-
-    a = pd.Series(["x\x1f", "x"])
-    b = pd.Series(["y", "\x1fy"])
-    got = _jaro_winkler_pct_udf.func(a, b)
-    assert got.iloc[0] == pytest.approx(jaro_winkler("x\x1f", "y") * 100.0)
-    assert got.iloc[1] == pytest.approx(jaro_winkler("x", "\x1fy") * 100.0)
+    long_a = "ab" * 60 + "Ó"
+    long_b = "ab" * 59 + "xyzÓ"
+    rows = [
+        (None, None),
+        ("martha", None),
+        (None, "marhta"),
+        ("Ó Súilleabháin", "O Suilleabhain"),
+        ("straße", "strasse"),
+        ("名前", "名"),
+        ("x\x1f", "y"),
+        ("x", "\x1fy"),
+        (long_a, long_b),
+        ("MARTHA", "MARHTA"),
+    ]
+    df = spark.createDataFrame(rows, "a string, b string")
+    got = df.select("a", "b", jaro_winkler_pct_udf("a", "b").alias("s")).collect()
+    assert len(got) == len(rows)
+    for r in got:
+        assert r.s == jaro_winkler(r.a or "", r.b or "") * 100.0, (r.a, r.b)
+    assert len(long_a) > 96 and 0.0 < jaro_winkler(long_a, long_b) < 1.0

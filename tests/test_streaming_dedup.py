@@ -163,3 +163,47 @@ def test_incremental_line_store_matches_batch(spark, tmp_path):
     final = {r.doc_id: r for r in got.collect()}
     assert final[800001].clean_text == "unique gamma\nmore gamma"
     assert final[800003].n_lines_dropped == 1
+
+
+def _commit_and_stop(q) -> None:
+    """Let a long-lived (no trigger) query commit what has arrived,
+    check it is still running, and stop it."""
+    try:
+        q.processAllAvailable()
+        assert q.isActive and q.lastProgress is not None
+    finally:
+        q.stop()
+
+
+def test_incremental_dedup_long_lived_starts(spark, tmp_path):
+    """available_now=False is the long-lived mode: the query starts
+    with no trigger call (trigger(availableNow=False) raises
+    VALUE_NOT_TRUE), commits a batch and keeps running until stopped."""
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").select("doc_id", "text")
+    src, store, out, ck = (str(tmp_path / d) for d in ("src", "store", "out", "ck"))
+    docs.write.parquet(src)
+    q = incremental_dedup(
+        spark.readStream.schema(docs.schema).parquet(src),
+        store, out, ck, available_now=False,
+    )
+    _commit_and_stop(q)
+    assert spark.read.parquet(out).count() > 0
+    assert spark.read.parquet(store).count() > 0
+
+
+def test_incremental_line_store_long_lived_starts(spark, tmp_path):
+    from name_matcher_spark.streaming.dedup import incremental_line_store
+
+    docs = (
+        spark.read.parquet(f"{SF_DIR}/documents.parquet")
+        .select("doc_id", "text")
+        .limit(60)
+    )
+    src, store, ck = (str(tmp_path / d) for d in ("src", "store", "ck"))
+    docs.write.parquet(src)
+    q = incremental_line_store(
+        spark.readStream.schema(docs.schema).parquet(src),
+        store, ck, available_now=False,
+    )
+    _commit_and_stop(q)
+    assert spark.read.parquet(store).count() > 0

@@ -243,8 +243,8 @@ def test_spark_submit_table_checkpoints(tmp_path):
 @pytest.mark.slow
 def test_spark_submit_stream_mode(tmp_path):
     """--stream: pages directory drained incrementally under a real
-    spark-submit; cluster label store must match the local batch
-    pipeline over the same pages."""
+    spark-submit by one query; cluster label store must match the
+    local batch pipeline over the same pages."""
     sys.path.insert(0, str(REPO / "tools"))
     from make_pyfiles_zip import build
 
@@ -268,6 +268,10 @@ def test_spark_submit_stream_mode(tmp_path):
     assert summary["pairs"] > 0
     assert summary["clustered_nodes"] > 0
     assert (tmp_path / "out" / "clusters").exists()
+    # One query wrote both the pairs and the label store: no second
+    # (clustering) query ever kept a checkpoint.
+    assert (tmp_path / "ckpt" / "ck_linkage").exists()
+    assert not (tmp_path / "ckpt" / "ck_clusters").exists()
 
     # Parity with the local batch pipeline.
     from name_matcher_spark.operators.clustering import cluster_pairs

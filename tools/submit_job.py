@@ -17,11 +17,13 @@ Inputs are parquet tables of either shape:
   * persons (uuid/id, first_name, middle_name, last_name, birthdate, ...)
 
 Streaming mode (--stream): treat --pages-a as a DIRECTORY where new
-page files keep arriving; each drain fuzzy-matches new pages against
-the --pages-b reference corpus and folds the pairs into a maintained
-cluster label store under --out. Re-submitting resumes from the
-checkpoints and processes only new files (run with --stream-forever
-for a long-lived micro-batch job instead of drain-and-exit).
+page files keep arriving. One query (``incremental_linkage`` with a
+label store) fuzzy-matches each micro-batch of new pages against the
+--pages-b reference corpus, writes the pairs under --out/pairs and
+folds them into the cluster label store under --out/clusters in the
+same batch. By default it drains the files present and exits;
+re-submitting resumes from the checkpoint and processes only new
+files. --stream-forever runs the same query long-lived instead.
 
 Every stage (extract, prepare, blocked fuzzy scoring, households,
 clusters) checkpoints to --work-dir with a lineage manifest
@@ -70,96 +72,48 @@ def parse_args(argv: list[str] | None = None) -> argparse.Namespace:
     return ap.parse_args(argv)
 
 
-def _fs_exists(spark, path: str) -> bool:
-    """Existence check through the Hadoop FileSystem for the path's OWN
-    scheme (the streaming/dedup.py store idiom): a driver-local
-    os.path.exists is always False for a remote --out URI (s3://,
-    hdfs://), which silently skipped the clustering drain and reported
-    pairs=0 even though the linkage drain succeeded."""
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    return p.getFileSystem(spark._jsc.hadoopConfiguration()).exists(p)
-
-
 def run_stream(spark, args) -> dict:
     """Incremental pipeline: pages stream -> per-batch fuzzy match vs
-    the reference corpus -> maintained cluster label store."""
+    the reference corpus -> pairs sink + maintained cluster label store."""
     from name_matcher_spark.operators.extract import extract_entities
     from name_matcher_spark.operators.prepare import prepare_persons
-    from name_matcher_spark.streaming.clustering import (
-        incremental_clusters,
-        read_clusters,
-    )
+    from name_matcher_spark.streaming.batches import path_exists
+    from name_matcher_spark.streaming.clustering import read_clusters
     from name_matcher_spark.streaming.linkage import incremental_linkage
 
     out = args.out.rstrip("/")
-    work = args.work_dir.rstrip("/")
     ref_pages = spark.read.parquet(args.pages_b)
     ref = prepare_persons(
         extract_entities(ref_pages).withColumnRenamed("url", "uuid"),
         args.include_middle,
     )
-    pages_schema = ref_pages.schema
-    pairs_dir = f"{out}/pairs"
-    if args.stream_forever:
-        # Long-lived mode: the linkage query never terminates, so a
-        # second query started after awaiting it would never run (the
-        # old bug: the label store silently never updated). Clustering
-        # is folded into the linkage foreachBatch instead — one query,
-        # pairs sink + label store updated per batch, both idempotent.
-        q1 = incremental_linkage(
-            spark.readStream.schema(pages_schema).parquet(args.pages_a),
-            ref,
-            pairs_dir,
-            f"{work}/ck_linkage",
-            include_middle=args.include_middle,
-            max_block_rows=args.max_block_rows,
-            available_now=False,
-            cluster_labels_dir=f"{out}/clusters",
-            cluster_threshold=args.threshold,
-        )
-        q1.awaitTermination()
-    else:
-        # Drain mode: sequential two-stage is correct (and exercises
-        # the pairs-sink-as-stream-source chaining).
-        q1 = incremental_linkage(
-            spark.readStream.schema(pages_schema).parquet(args.pages_a),
-            ref,
-            pairs_dir,
-            f"{work}/ck_linkage",
-            include_middle=args.include_middle,
-            max_block_rows=args.max_block_rows,
-        )
-        q1.awaitTermination()
-
-        if _fs_exists(spark, pairs_dir):
-            # an empty input stream never creates the pairs sink; a
-            # stream source on a missing path would fail the run AFTER
-            # the linkage drain already succeeded
-            q2 = incremental_clusters(
-                spark.readStream.schema(
-                    "id_1 long, id_2 long, confidence double"
-                ).parquet(pairs_dir),
-                f"{out}/clusters",
-                f"{work}/ck_clusters",
-                threshold=args.threshold,
-            )
-            q2.awaitTermination()
-    # Explicit schema + existence tolerance: a drain whose batches all
-    # matched nothing leaves the pairs sink with no data files (and the
-    # label store never created) — the summary must not crash a run
-    # whose streaming work succeeded.
-    pairs_schema = (
-        "id_1 long, id_2 long, confidence double, batch_id long"
+    pairs_dir, labels_dir = f"{out}/pairs", f"{out}/clusters"
+    q = incremental_linkage(
+        spark.readStream.schema(ref_pages.schema).parquet(args.pages_a),
+        ref,
+        pairs_dir,
+        f"{args.work_dir.rstrip('/')}/ck_linkage",
+        include_middle=args.include_middle,
+        max_block_rows=args.max_block_rows,
+        available_now=not args.stream_forever,
+        cluster_labels_dir=labels_dir,
+        cluster_threshold=args.threshold,
     )
+    q.awaitTermination()
+    # Existence tolerance: an empty input stream creates neither sink,
+    # and a drain whose batches all matched nothing leaves the pairs
+    # sink without data files and the label store uncreated — the
+    # summary must not crash a run whose streaming work succeeded.
     n_pairs = (
-        spark.read.schema(pairs_schema).parquet(pairs_dir).count()
-        if _fs_exists(spark, pairs_dir)
+        spark.read.schema("id_1 long, id_2 long, confidence double, batch_id long")
+        .parquet(pairs_dir)
+        .count()
+        if path_exists(spark, pairs_dir)
         else 0
     )
     n_nodes = (
-        read_clusters(spark, f"{out}/clusters").count()
-        if _fs_exists(spark, f"{out}/clusters")
+        read_clusters(spark, labels_dir).count()
+        if path_exists(spark, labels_dir)
         else 0
     )
     return {
